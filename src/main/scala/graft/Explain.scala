@@ -3,7 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans for named queries (or all),
-  * to audit pushdown / broadcast / codegen per the scale checklist.
+  * to audit pushdown / broadcast / codegen per the scale checklist. The
+  * session carries [[Bench]]'s planning settings at local[4], so a dump
+  * shows the plan the benchmark times (AQE sizes reduce stages by bytes,
+  * not by parallelism). Each query runs before it is dumped, so the dump
+  * is AQE's final plan: the exchanges, broadcasts and query stages the
+  * run actually used. Caches are dropped between queries, as in Bench.
   * Usage: runMain graft.Explain <sfDir> [query ...]
   */
 object Explain {
@@ -13,6 +18,9 @@ object Explain {
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.buffer.pageSize", "2m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -20,9 +28,13 @@ object Explain {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.contains(name)) {
         println(s"\n========== $name ==========")
-        try println(fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable => println(s"explain failed: $e") }
+        try {
+          val df = fn(spark, sfDir)
+          df.collect()
+          println(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+        } catch { case e: Throwable => println(s"explain failed: $e") }
+        finally spark.catalog.clearCache()
       }
     }
     spark.stop()

@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
@@ -28,26 +32,47 @@ object Dedup {
     * rows; at cluster scale the input is already wide and the probe below
     * skips the shuffle.
     *
-    * The probe reads the optimizer's SIZE ESTIMATE instead of
-    * `df.rdd.getNumPartitions` (r19-verdict item 6): the RDD probe
-    * physical-plans the input a second time and — when the input sits
-    * behind a shuffle, as in q121's deduped corpus — AQE *executes* the
-    * upstream stages just to learn a partition count. The logical stat
-    * costs nothing (file-index bytes for scans, propagated estimates
-    * elsewhere) and decides the same way: a file scan only splits into
-    * ≥ defaultParallelism partitions when it carries at least
-    * defaultParallelism × openCostInBytes of input (Spark sizes splits
-    * as min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism))),
-    * so below that bound the fan-out would under-parallelize and the
+    * The probe reads a size instead of `df.rdd.getNumPartitions`
+    * (r19-verdict item 6): the RDD probe physical-plans the input a second
+    * time and — when the input sits behind a shuffle — AQE *executes* the
+    * upstream stages just to learn a partition count. A file scan only
+    * splits into ≥ defaultParallelism partitions when it carries at least
+    * defaultParallelism × openCostInBytes of input (Spark sizes splits as
+    * min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism))), so
+    * below that bound the fan-out would under-parallelize and the
     * narrow-row rebalance pays for itself; above it the input is already
-    * wide enough that no rebalance is needed. */
+    * wide enough that no rebalance is needed. Only a size that is a FACT
+    * counts ([[knownInputBytes]]); an estimate — unknown, the default, or
+    * propagated through an aggregate or join — says "not wide", because a
+    * post-shuffle intermediate can be one coalesced partition whatever
+    * its estimate claims. */
   private[ops] def fanoutReady(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val np = sess.sparkContext.defaultParallelism
     val openCost = sess.sessionState.conf.filesOpenCostInBytes
-    val wideEnough = df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-      BigInt(np.toLong) * openCost
+    val wideEnough = knownInputBytes(df.queryExecution.optimizedPlan)
+      .exists(_ >= BigInt(np.toLong) * openCost)
     if (wideEnough) df else df.repartition(np)
+  }
+
+  /** The input bytes under `plan` when they are known rather than
+    * estimated: a file scan's file-index size, or the bytes a MATERIALIZED
+    * cache holds, seen through row-local projections and filters (and
+    * summed over a union). Anything else is None: an un-materialized
+    * cache, an aggregate, a join, or a source that may report only the
+    * `defaultSizeInBytes` fallback. */
+  private[ops] def knownInputBytes(plan: LogicalPlan): Option[BigInt] = plan match {
+    case r: InMemoryRelation =>
+      if (r.cacheBuilder.isCachedColumnBuffersLoaded)
+        Some(BigInt(r.cacheBuilder.sizeInBytesStats.value))
+      else None
+    case r: LogicalRelation if r.relation.isInstanceOf[HadoopFsRelation] =>
+      Some(r.stats.sizeInBytes)
+    case p @ (_: Project | _: Filter) => knownInputBytes(p.children.head)
+    case u: Union =>
+      val parts = u.children.map(knownInputBytes)
+      if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None
+    case _ => None
   }
 
   private[ops] val tokensSql =
@@ -330,7 +355,22 @@ object Dedup {
     * true near-dups share 30-41 rare grams and score ≥0.95 while the
     * background stays far below the 0.5 threshold — same pairs found as
     * the unpruned variant, at a fraction of the work, and the pruning
-    * scales: df is a per-block aggregate, never a cross product. */
+    * scales: df is a per-block aggregate, never a cross product.
+    *
+    * Pairing and verification are [[jaccardPairs]]: an exact size-ratio
+    * bound cuts the pair join before verification, and each document's
+    * rare-gram count rides through the pair aggregate instead of being
+    * joined back to it. The few survivors (7 pairs at sf0.1) cross one
+    * single-partition exchange to the sort. A plain `orderBy` would
+    * range-partition them instead, and its sampling job re-runs the whole
+    * pair aggregate, in one task, only to pick bounds for a handful of
+    * rows; `coalesce(1)` would avoid the exchange but pull the pair join
+    * and aggregate into a single task. At sf0.1 (local[4], 4 shuffle
+    * partitions), against the shape that joined sizes back: jobs 18 → 11,
+    * tasks 51 → 35, exchanges 4 → 1 and broadcasts 3 → 1 in the final
+    * adaptive plan, shuffle write 5.5 or 9.75 MiB (the join-backs
+    * broadcast or shuffled, pass by pass) → 2.8 MiB in every pass, the
+    * cold one included. */
   val q43NgramJaccard: Q = (spark, dir) => {
     import spark.implicits._
     // gram identity only matters within this query (the output is doc
@@ -347,31 +387,58 @@ object Dedup {
       .cache() // consumed twice (df aggregate + the rare join input):
                // without the cache the full gram fan-out runs twice
     val df = grams.groupBy($"source", $"g").agg(count(lit(1)).as("c"))
-    val rare = grams.join(df.filter($"c" <= 25), Seq("source", "g"))
-      .select($"doc_id", $"source", $"g")
-      .cache() // consumed 3×: sizes + both sides of the pair join
-    val sizes = rare.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    // Pair generation via self-join on (source, gram): both sides carry
-    // the partitioning of the rare-gram join, so no extra exchange is
-    // needed, and df<=25 bounds the per-key collision count. (A grouped
-    // collect_list + HOF pair expansion was measured SLOWER here: same
-    // shuffle volume, but per-element lambda evaluation replaces the
-    // codegen'd hash-join probe.)
-    val inter = rare.as("ga")
-      .join(rare.as("gb"),
+    // A semi join can build only its right side, the ~10k rare keys at
+    // sf0.1. As an inner join, AQE sometimes saw the key aggregate finish
+    // before the gram cache had its real size, and broadcast the 881k gram
+    // rows instead (a 106 MiB build, ~0.6 s of driver time).
+    val rare = grams.join(df.filter($"c" <= 25), Seq("source", "g"), "left_semi")
+    jaccardPairs(rare).repartition(1).orderBy($"doc_a", $"doc_b")
+  }
+
+  /** Document pairs of one `source` whose `g` sets have Jaccard ≥ 0.5,
+    * from a frame of distinct (doc_id, source, g) rows; columns doc_a <
+    * doc_b, inter, na, nb, jaccard.
+    *
+    * The size-ratio bound is EXACT, not a heuristic: |A ∩ B| ≤ min(|A|,
+    * |B|) and |A ∪ B| ≥ max(|A|, |B|), so J(A, B) ≤ min/max, and a pair
+    * with max > 2·min has J < 0.5 whatever its overlap. The join keeps
+    * equality — B ⊂ A with |A| = 2|B| scores exactly 0.5 — and so drops
+    * only pairs that verification would reject, before they are counted
+    * (q43 at sf0.1: pair-join rows 1.24M → 0.94M, distinct pairs 438k →
+    * 293k).
+    *
+    * The bound needs both sizes at join time, so each row carries its
+    * document's size `n` from a window over doc_id, and `n` stays a
+    * grouping key of the pair aggregate (it is a function of the doc, so
+    * the groups are unchanged). Nothing is joined back to the
+    * aggregate's output: no second sizes aggregate, no extra broadcast,
+    * and no shuffled join-back of every pair row when AQE declines to
+    * broadcast. The window also leaves the cached rows hash-partitioned
+    * by doc_id; the pair join streams the `ga` side, so the aggregate
+    * keyed by (ga.doc_id, …) is already clustered and plans without an
+    * exchange. */
+  private[ops] def jaccardPairs(grams: DataFrame): DataFrame = {
+    import grams.sparkSession.implicits._
+    val sized = grams
+      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
+      .cache() // both sides of the pair join
+    // Pair generation via self-join on (source, gram); df<=25 in q43
+    // bounds the per-key collision count. (A grouped collect_list + HOF
+    // pair expansion was measured SLOWER here: same shuffle volume, but
+    // per-element lambda evaluation replaces the codegen'd hash-join
+    // probe.)
+    sized.as("ga")
+      .join(sized.as("gb"),
         col("ga.source") === col("gb.source") && col("ga.g") === col("gb.g")
-          && col("ga.doc_id") < col("gb.doc_id"))
-      .groupBy(col("ga.doc_id").as("doc_a"), col("gb.doc_id").as("doc_b"))
+          && col("ga.doc_id") < col("gb.doc_id")
+          && col("ga.n") * 2 >= col("gb.n") && col("gb.n") * 2 >= col("ga.n"))
+      .groupBy(col("ga.doc_id").as("doc_a"), col("gb.doc_id").as("doc_b"),
+        col("ga.n").as("na"), col("gb.n").as("nb"))
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.as("za"), $"doc_a" === col("za.doc_id"))
-      .join(sizes.as("zb"), $"doc_b" === col("zb.doc_id"))
       .withColumn("jaccard",
-        $"inter".cast("double") / (col("za.n") + col("zb.n") - $"inter"))
+        $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
       .filter($"jaccard" >= 0.5)
-      .select($"doc_a", $"doc_b", $"inter",
-        col("za.n").as("na"), col("zb.n").as("nb"), $"jaccard")
-      .orderBy($"doc_a", $"doc_b")
+      .select($"doc_a", $"doc_b", $"inter", $"na", $"nb", $"jaccard")
   }
 
   val queries: Map[String, Q] = Map(
