@@ -17,9 +17,8 @@ import org.apache.spark.sql.expressions.Aggregator
 class TopKByValue(k: Int)
   extends Aggregator[(Double, Long), List[(Double, Long)], List[(Double, Long)]] {
 
-  /** keep order: weakest first — (value ASC, id DESC). */
   private def lt(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 < b._1 || (a._1 == b._1 && a._2 > b._2)
+    TopKByValue.lt(a._1, a._2, b._1, b._2)
 
   override def zero: List[(Double, Long)] = Nil
 
@@ -42,4 +41,13 @@ class TopKByValue(k: Int)
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[(Double, Long)]]()
   override def outputEncoder: Encoder[List[(Double, Long)]] =
     bufferEncoder
+}
+
+object TopKByValue {
+  /** The keep order shared by every top-k in the engine ([[TopKByValue]],
+    * [[KnnBlockProfile]]): `a` is WEAKER than `b` — (value ASC, id DESC),
+    * so the strongest entry has the highest value and, among equal
+    * values, the smallest id. */
+  def lt(av: Double, aid: Long, bv: Double, bid: Long): Boolean =
+    av < bv || (av == bv && aid > bid)
 }

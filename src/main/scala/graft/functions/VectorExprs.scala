@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -131,6 +133,79 @@ case class CosineSimLong(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Random-hyperplane LSH signature of a quantized (long) vector: bit h is
+  * set iff `dot(e, planes(h)) >= 0`. ONE loop over the planes, which the
+  * expression holds as a `long[][]` reference object, where the composed
+  * form (a sum of one `when(dot(e, typedLit(plane)) >= 0, 1L << h)` term
+  * per plane) inlines every plane as a literal array into generated code.
+  * Each dot is [[DotProductLong]]'s exact loop (over the shorter length),
+  * so the bits are identical; a null vector yields 0, as every composed
+  * term falls to its `otherwise(0L)` (asserted by KnnBlockSpec). */
+case class SignBits(child: Expression, planes: Seq[Seq[Long]])
+  extends UnaryExpression {
+  require(planes.size < 64, s"at most 63 planes fit a signature, got ${planes.size}")
+
+  @transient private lazy val planeArr: Array[Array[Long]] =
+    planes.map(_.toArray).toArray
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "sign_bits"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"${planes.size} planes")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<bigint> argument, got ${other.simpleString}")
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) 0L else {
+      val e = v.asInstanceOf[ArrayData]
+      var sig = 0L
+      var h = 0
+      while (h < planeArr.length) {
+        val w = planeArr(h)
+        val m = math.min(e.numElements(), w.length)
+        var d = 0L
+        var i = 0
+        while (i < m) { d += e.getLong(i) * w(i); i += 1 }
+        if (d >= 0) sig |= 1L << h
+        h += 1
+      }
+      sig
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val e = child.genCode(ctx)
+    val p = ctx.addReferenceObj("planes", planeArr, "long[][]")
+    val h = ctx.freshName("h")
+    val i = ctx.freshName("i")
+    val m = ctx.freshName("m")
+    val d = ctx.freshName("d")
+    ev.copy(code = code"""
+       |${e.code}
+       |long ${ev.value} = 0L;
+       |if (!${e.isNull}) {
+       |  for (int $h = 0; $h < $p.length; $h++) {
+       |    int $m = java.lang.Math.min(${e.value}.numElements(), $p[$h].length);
+       |    long $d = 0L;
+       |    for (int $i = 0; $i < $m; $i++) {
+       |      $d += ${e.value}.getLong($i) * $p[$h][$i];
+       |    }
+       |    if ($d >= 0L) ${ev.value} |= 1L << $h;
+       |  }
+       |}
+     """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SignBits =
+    copy(child = newChild)
+}
+
 object VectorExprs {
   /** Column API for [[DotProductLong]]. */
   def dotLong(a: Column, b: Column): Column =
@@ -141,6 +216,14 @@ object VectorExprs {
   def cosineLong(a: Column, b: Column): Column =
     GraftBridge.column(CosineSimLong(
       GraftBridge.expression(a), GraftBridge.expression(b)))
+
+  /** Column API for [[SignBits]]. */
+  def signBits(e: Column, planes: Seq[Seq[Long]]): Column =
+    GraftBridge.column(SignBits(GraftBridge.expression(e), planes))
+
+  /** Column API for [[KnnBlockProfile]]. */
+  def knnBlockProfile(block: Column, k: Int): Column =
+    GraftBridge.column(KnnBlockProfile(GraftBridge.expression(block), k))
 }
 
 /** Optimizer rule: rewrite the hand-composed cosine pattern

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** Shared helpers for oracle-parity-safe aggregation.
   *
@@ -54,33 +54,30 @@ object OpsUtil {
       .orderBy(col("h"), tie)
       .limit(k)
 
-  /** Multiset equality of two frames as ONE Spark action. The fixture
-    * audits used to run `a.exceptAll(b).isEmpty && b.exceptAll(a)
-    * .isEmpty` — two sequential jobs per audit, each paying its own
-    * scheduling + AQE round trips, which at the bench's tiny SF is
-    * most of the audit's wall time. The union form is the same
-    * multiset test (both directions empty ⟺ their union is empty)
-    * planned as one job; at cluster scale it is also better — one
-    * pass over each input instead of two. */
-  def sameRows(a: DataFrame, b: DataFrame): Boolean =
-    a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty
-
   /** Multiset equality of two BOUNDED frames, decided on the driver.
     *
     * For the lakehouse/MV fixture audits both sides are tiny BY
     * CONSTRUCTION at any data scale — view-grain aggregates (≤ the
     * group count, 6–12 rows) or constant-size fixture tables (≤ ~50
     * rows from GraftDocsSource): the frames never grow with the input
-    * dir, so two collects are scale-safe, while the distributed
-    * [[sameRows]] plan (two exceptAll aggregates, each shuffling both
-    * inputs, unioned under AQE) paid ~6 query-stage jobs of pure
-    * scheduling per audit at bench SF (guide §1.2). Row.equals handles
-    * NaN and compares decimals by value, matching exceptAll's
-    * null-safe semantics for these schemas; both sides share a schema
-    * at identical types, so map-key hashing is consistent. Keep
-    * [[sameRows]] for any comparison whose inputs scale with the
-    * corpus. */
+    * dir, so two collects are scale-safe, while a distributed
+    * `exceptAll` plan (two aggregates, each shuffling both inputs,
+    * unioned under AQE) paid ~6 query-stage jobs of pure scheduling per
+    * audit at bench SF (guide §1.2). Do not use it for frames that
+    * scale with the corpus.
+    *
+    * Rows are counted in a HashMap keyed on `Row`, which is only sound
+    * where `Row.equals` and `Row.hashCode` agree with SQL equality. They
+    * do not for binary (array identity hash), decimal (equal values of
+    * different scale) and float/double (-0.0 vs 0.0) columns, so a
+    * schema holding any of those, at any nesting depth, is rejected. */
   def sameRowsLocal(a: DataFrame, b: DataFrame): Boolean = {
+    Seq(a, b).foreach(df => unsafeKeyField(df.schema).foreach { f =>
+      throw new IllegalArgumentException(
+        s"sameRowsLocal cannot compare column ${f.name} of type " +
+          s"${f.dataType.simpleString}: binary, decimal and float/double " +
+          "values do not hash consistently with their equality")
+    })
     val ca = a.collect(); val cb = b.collect()
     ca.length == cb.length && {
       val counts = scala.collection.mutable.HashMap
@@ -93,6 +90,37 @@ object OpsUtil {
         }
       }
     }
+  }
+
+  /** `df`'s plan as optimized under the session's current settings, with
+    * `cols` cast to their full text: a double's string form round-trips
+    * and a decimal's carries its full scale, so two frames of one schema
+    * compare equal as text exactly when their values do. This is how a
+    * double or decimal result reaches [[sameRowsLocal]]. Both plans are
+    * fixed here, under the settings of the call: casting over `df`'s
+    * unoptimized plan could stop a rewrite rule from matching (the cast
+    * folds into the aggregate), and a frame planned at collect time
+    * would see the settings of that moment. */
+  def plannedText(df: DataFrame, cols: String*): DataFrame = {
+    val text = cols.foldLeft(org.apache.spark.sql.GraftBridge.ofRows(
+        df.sparkSession, df.queryExecution.optimizedPlan)) { (f, c) =>
+      f.withColumn(c, col(c).cast("string"))
+    }
+    text.queryExecution.optimizedPlan
+    text
+  }
+
+  /** The first top-level field whose type holds a binary, decimal or
+    * floating-point value anywhere inside it. */
+  private def unsafeKeyField(schema: StructType): Option[StructField] = {
+    def unsafe(t: DataType): Boolean = t match {
+      case BinaryType | FloatType | DoubleType | _: DecimalType => true
+      case ArrayType(et, _) => unsafe(et)
+      case MapType(kt, vt, _) => unsafe(kt) || unsafe(vt)
+      case StructType(fs) => fs.exists(f => unsafe(f.dataType))
+      case _ => false
+    }
+    schema.fields.find(f => unsafe(f.dataType))
   }
 
   /** Materialize a SMALL (≤ a few hundred rows — profile/audit-sized)

@@ -76,10 +76,9 @@ object Round9 {
     val emb = Tables.embeddings(spark, dir)
       .select($"vec_id", $"label", quantize($"embedding").as("e"))
       .withColumn("n2", dot($"e", $"e"))
-    val sigBits = (0 until 24).map { h =>
-      when(dot($"e", typedLit(lshPlanes24(h))) >= 0, 1L << h).otherwise(0L)
-    }.reduce(_ + _)
-    val sigs = emb.withColumn("sig", sigBits).cache()
+    val sigs = emb
+      .withColumn("sig", graft.functions.VectorExprs.signBits($"e", lshPlanes24))
+      .cache()
     val banded = sigs.select($"vec_id", $"label",
         explode(array((0 until 6).map(k =>
           struct(lit(k).as("band"),

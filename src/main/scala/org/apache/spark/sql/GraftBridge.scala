@@ -11,6 +11,11 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Spark's own DIVIDE_BY_ZERO error, for kernels that replace a
+    * composed division and must fail where it failed. */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Build a DataFrame over a (possibly custom) logical plan —
     * `Dataset.ofRows` is private[sql] in Spark 4. */
   def ofRows(spark: SparkSession,

@@ -139,17 +139,11 @@ class Round8Spec extends SparkSpec {
     import spark.implicits._
     // (1) the real corpus sits at the isotropic floor, so the gate keeps
     // the exact all-pairs path (hash therefore unchanged vs the oracle)
-    val dot = graft.functions.VectorExprs.dotLong _
-    def sigsOf(df: org.apache.spark.sql.DataFrame) = {
-      val q = df.select($"vec_id", $"label",
+    def sigsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select($"label", graft.functions.VectorExprs.signBits(
         transform($"embedding",
-          x => floor(x.cast("double") * 1000).cast("long")).as("e"))
-      val bits = (0 until 24).map { h =>
-        when(dot($"e", typedLit(ops.Round9.lshPlanes24(h))) >= 0, 1L << h)
-          .otherwise(0L)
-      }.reduce(_ + _)
-      q.select($"label", bits.as("sig"))
-    }
+          x => floor(x.cast("double") * 1000).cast("long")),
+        ops.Round9.lshPlanes24).as("sig"))
     val realPpm = ops.Round8.lshBandAgreePpm(
       sigsOf(Tables.embeddings(spark, sf)))
     assert(realPpm < ops.Round8.lshGatePpm,

@@ -52,19 +52,20 @@ class ScaleProofSpec extends SparkSpec {
   }
 
   test("q127 kNN: the bounded-heap top-k collapses the pair fan-out before its exchange") {
-    // q127's contract: the TopKByValue aggregate combines map-side, so
-    // the exchange after the label-blocked pair join carries ~3 rows per
-    // src vector instead of every scored pair. At sf0.001 the pair join
-    // scores ~|block|² ≈ 25k pairs; the post-join shuffle must stay near
-    // |vecs| (500) + the small rollup aggregates — far below pair volume.
-    val recs = shuffleRecords(
-      ops.Round8.q127KnnGraph(spark, "/root/testdata/sf0.001").count())
+    // q127's contract: no scored pair crosses an exchange. The exact
+    // path shuffles each label block's vectors once (a collect_list
+    // combined map-side, ≤ |vecs| records) into the block kernel, and the
+    // gate's one (label, band, bv) aggregate adds ≤ |labels|·96 rows; the
+    // ~|block|² ≈ 25k pairs at sf0.001 live only inside the kernel.
+    val emb = Tables.embeddings(spark, sf)
+    val (nVecs, nLabels) =
+      (emb.count(), emb.select("label").distinct().count())
+    val recs = shuffleRecords(ops.Round8.q127KnnGraph(spark, sf).count())
     spark.catalog.clearCache()
-    assert(recs > 0, "the top-k aggregation must actually shuffle")
-    val pairRows = 25000 // ~500 vecs in ~10 label blocks of ~50: 50²·10
-    assert(recs < pairRows / 2,
-      s"$recs shuffle records — a rank-window plan would exchange every " +
-        "scored pair; the bounded heap must collapse them first")
+    assert(recs > 0, "the block aggregate must actually shuffle")
+    assert(recs <= nVecs + nLabels * 96,
+      s"$recs shuffle records for $nVecs vectors in $nLabels blocks — " +
+        "a scored pair crossed an exchange")
   }
 
   test("q142 inverted index: posting caps collapse the token exchange below the posting volume") {
