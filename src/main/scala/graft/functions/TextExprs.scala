@@ -8,75 +8,23 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The DISTINCT character-n-gram keys of a string, as one array of longs —
-  * the gram fan-out primitive of the n-gram Jaccard dedup (q43), moved
-  * from "explode every position, then DISTINCT corpus-wide" into a single
-  * per-document evaluation.
-  *
-  * Why an Expression beats the composed form twice over:
-  *  - the per-document dedup happens in a local hash set DURING the scan,
-  *    so the corpus-wide `.distinct()` exchange (the largest shuffle of
-  *    the composed q43 plan — one row per character position) disappears:
-  *    the explode emits only each document's distinct grams;
-  *  - the key is the n gram BYTES packed big-endian into the long
-  *    (n ≤ 8), which is INJECTIVE — unlike xxhash64(substr), two distinct
-  *    grams can never merge, so the downstream Jaccard is exact by
-  *    construction rather than exact-with-negligible-collision-probability.
-  *
-  * One eval per document with a tight hand-written loop (CodegenFallback —
-  * the interpreted boundary is crossed once per row, not once per gram,
-  * which is the HOF-lambda pitfall this codebase avoids everywhere).
-  * Output order is first-occurrence (LinkedHashSet), deterministic for
-  * identical text regardless of partitioning.
-  */
-case class DistinctGramKeys(child: Expression, n: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  require(n >= 1 && n <= 8, "gram length must fit a packed long (1..8 bytes)")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "distinct_gram_keys"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    val m = bytes.length - n + 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Long])
-    val seen = new java.util.LinkedHashSet[java.lang.Long](m * 2)
-    var i = 0
-    while (i < m) {
-      var k = 0L
-      var j = 0
-      while (j < n) { k = (k << 8) | (bytes(i + j) & 0xffL); j += 1 }
-      seen.add(k)
-      i += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var p = 0
-    while (it.hasNext) { out(p) = it.next(); p += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(
-    newChild: Expression): DistinctGramKeys = copy(child = newChild)
-}
-
+// Per-row text kernels of the dedup, decontamination and curation
+// queries. Each is one Catalyst expression with a tight hand-written loop,
+// evaluated once per row, so the interpreted boundary is crossed once per
+// document, not once per gram or token (the HOF-lambda pitfall this
+// codebase avoids everywhere). The character-n-gram Jaccard dedup (q43)
+// has no per-row kernel here: JaccardBlockPairs packs and pairs each
+// source block's 4-grams in one call, so no gram becomes a row.
 
 /** Unicode NFC normalization as a native Catalyst expression.
   *
   * Spark has no built-in normalizer, and the usual fallback — a Scala
   * `udf()` — breaks whole-stage codegen around every operator that uses
   * it. `java.text.Normalizer` is one static JDK call, so the generated
-  * code stays inside the codegen'd stage (same rationale as
-  * [[DistinctGramKeys]]: the built-ins genuinely can't express it, the
-  * custom expression keeps the pipeline fused). NFC is the canonical
-  * composition a text pipeline applies before hashing/dedup — the SAME
+  * code stays inside the codegen'd stage: the built-ins genuinely can't
+  * express it, and the custom expression keeps the pipeline fused. NFC
+  * is the canonical composition a text pipeline applies before
+  * hashing/dedup — the SAME
   * visible string in composed and decomposed form must dedup together,
   * which is exactly what q157 audits. DuckDB's `nfc_normalize` is the
   * oracle twin. */
@@ -108,8 +56,8 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 /** The DISTINCT word-n-grams of a string, space-joined, as one array of
-  * strings — the word-gram sibling of [[DistinctGramKeys]], and the
-  * fan-out primitive behind the decontamination/novelty/containment
+  * strings — the word-gram sibling of [[JaccardBlockPairs.gramKeys]],
+  * and the fan-out primitive behind the decontamination/novelty/containment
   * family (q167/q174/q181).
   *
   * Semantics are EXACTLY the composed form
@@ -271,9 +219,9 @@ case class WinnowedFingerprints(child: Expression, k: Int, w: Int)
 }
 
 object TextExprs {
-  /** Column API for [[DistinctGramKeys]]. */
-  def distinctGramKeys(s: Column, n: Int): Column =
-    GraftBridge.column(DistinctGramKeys(GraftBridge.expression(s), n))
+  /** Column API for [[JaccardBlockPairs]]. */
+  def jaccardBlockPairs(block: Column, n: Int, maxDf: Int): Column =
+    GraftBridge.column(JaccardBlockPairs(GraftBridge.expression(block), n, maxDf))
 
   /** Column API for [[NfcNormalize]]. */
   def nfcNormalize(c: Column): Column =

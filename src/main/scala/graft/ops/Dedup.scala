@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import OpsUtil._
@@ -349,96 +348,50 @@ object Dedup {
 
   /** Character-4-gram Jaccard near-dup over DISCRIMINATIVE grams, blocked
     * by source. Grams occurring in >25 documents of a block are stop-grams
-    * — they carry no signal and their pair join is the whole cost (sum of
+    * — they carry no signal, and pairing on them is the whole cost (sum of
     * df² over gram keys: 96M collision rows at sf0.1 unpruned vs 2.6M
     * rare-only, a 36× cut). Jaccard is computed over the rare-gram sets;
     * true near-dups share 30-41 rare grams and score ≥0.95 while the
     * background stays far below the 0.5 threshold — same pairs found as
-    * the unpruned variant, at a fraction of the work, and the pruning
-    * scales: df is a per-block aggregate, never a cross product.
+    * the unpruned variant, at a fraction of the work.
     *
-    * Pairing and verification are [[jaccardPairs]]: an exact size-ratio
-    * bound cuts the pair join before verification, and each document's
-    * rare-gram count rides through the pair aggregate instead of being
-    * joined back to it. The few survivors (7 pairs at sf0.1) cross one
-    * single-partition exchange to the sort. A plain `orderBy` would
-    * range-partition them instead, and its sampling job re-runs the whole
-    * pair aggregate, in one task, only to pick bounds for a handful of
-    * rows; `coalesce(1)` would avoid the exchange but pull the pair join
-    * and aggregate into a single task. At sf0.1 (local[4], 4 shuffle
-    * partitions), against the shape that joined sizes back: jobs 18 → 11,
-    * tasks 51 → 35, exchanges 4 → 1 and broadcasts 3 → 1 in the final
-    * adaptive plan, shuffle write 5.5 or 9.75 MiB (the join-backs
-    * broadcast or shuffled, pass by pass) → 2.8 MiB in every pass, the
-    * cold one included. */
-  val q43NgramJaccard: Q = (spark, dir) => {
-    import spark.implicits._
-    // gram identity only matters within this query (the output is doc
-    // pairs), so grams travel as 8-byte longs: the custom
-    // DistinctGramKeys expression packs each 4-gram's bytes into the key
-    // (INJECTIVE — no hash collisions at all) and dedups per document in
-    // one eval, so the old corpus-wide `.distinct()` exchange — one row
-    // per character position, the plan's largest shuffle — never happens:
-    // the explode emits each document's distinct grams directly.
-    val grams = fanoutReady(Tables.documents(spark, dir))
-      .select($"doc_id", $"source",
-        explode(graft.functions.TextExprs.distinctGramKeys($"text", 4))
-          .as("g"))
-      .cache() // consumed twice (df aggregate + the rare join input):
-               // without the cache the full gram fan-out runs twice
-    val df = grams.groupBy($"source", $"g").agg(count(lit(1)).as("c"))
-    // A semi join can build only its right side, the ~10k rare keys at
-    // sf0.1. As an inner join, AQE sometimes saw the key aggregate finish
-    // before the gram cache had its real size, and broadcast the 881k gram
-    // rows instead (a 106 MiB build, ~0.6 s of driver time).
-    val rare = grams.join(df.filter($"c" <= 25), Seq("source", "g"), "left_semi")
-    jaccardPairs(rare).repartition(1).orderBy($"doc_a", $"doc_b")
-  }
+    * Scale shape: one aggregate gathers each source block's (doc_id,
+    * text) rows, and the [[graft.functions.JaccardBlockPairs]] kernel
+    * packs the grams, counts df, builds the rare grams' posting lists and
+    * counts the overlap of every pair inside the exact 2:1 size bound,
+    * inside one task — the partition-local index of REPOSE, as q127 does
+    * for vectors. The shuffle carries one row per document, never one per
+    * gram or per pair; memory is O(the block's distinct grams) per task
+    * and the work O(Σ posting² over rare grams), each posting list capped
+    * at 25 documents. The documents are hashed by source into
+    * `defaultParallelism` partitions first: a user-sized repartition is
+    * not coalesced by AQE, so the blocks spread over the cores instead of
+    * running one after another in the single task AQE would make of the
+    * small shuffle. The frame is lazy (no cache); the few survivors (7
+    * pairs at sf0.1) are sorted after a single-partition exchange, so no
+    * range-sampling job runs. Against the gram-row pipeline it replaced
+    * (explode, cache, df aggregate, semi join, size window, cached pair
+    * self-join, pair aggregate), at sf0.1 on local[4]: jobs 11 → 3,
+    * tasks 35 → 6, shuffle write 2.79 → 0.85 MB, no broadcast and no
+    * persisted RDD left behind. */
+  val q43NgramJaccard: Q = (spark, dir) =>
+    ngramJaccardFrom(Tables.documents(spark, dir))
 
-  /** Document pairs of one `source` whose `g` sets have Jaccard ≥ 0.5,
-    * from a frame of distinct (doc_id, source, g) rows; columns doc_a <
-    * doc_b, inter, na, nb, jaccard.
-    *
-    * The size-ratio bound is EXACT, not a heuristic: |A ∩ B| ≤ min(|A|,
-    * |B|) and |A ∪ B| ≥ max(|A|, |B|), so J(A, B) ≤ min/max, and a pair
-    * with max > 2·min has J < 0.5 whatever its overlap. The join keeps
-    * equality — B ⊂ A with |A| = 2|B| scores exactly 0.5 — and so drops
-    * only pairs that verification would reject, before they are counted
-    * (q43 at sf0.1: pair-join rows 1.24M → 0.94M, distinct pairs 438k →
-    * 293k).
-    *
-    * The bound needs both sizes at join time, so each row carries its
-    * document's size `n` from a window over doc_id, and `n` stays a
-    * grouping key of the pair aggregate (it is a function of the doc, so
-    * the groups are unchanged). Nothing is joined back to the
-    * aggregate's output: no second sizes aggregate, no extra broadcast,
-    * and no shuffled join-back of every pair row when AQE declines to
-    * broadcast. The window also leaves the cached rows hash-partitioned
-    * by doc_id; the pair join streams the `ga` side, so the aggregate
-    * keyed by (ga.doc_id, …) is already clustered and plans without an
-    * exchange. */
-  private[ops] def jaccardPairs(grams: DataFrame): DataFrame = {
-    import grams.sparkSession.implicits._
-    val sized = grams
-      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
-      .cache() // both sides of the pair join
-    // Pair generation via self-join on (source, gram); df<=25 in q43
-    // bounds the per-key collision count. (A grouped collect_list + HOF
-    // pair expansion was measured SLOWER here: same shuffle volume, but
-    // per-element lambda evaluation replaces the codegen'd hash-join
-    // probe.)
-    sized.as("ga")
-      .join(sized.as("gb"),
-        col("ga.source") === col("gb.source") && col("ga.g") === col("gb.g")
-          && col("ga.doc_id") < col("gb.doc_id")
-          && col("ga.n") * 2 >= col("gb.n") && col("gb.n") * 2 >= col("ga.n"))
-      .groupBy(col("ga.doc_id").as("doc_a"), col("gb.doc_id").as("doc_b"),
-        col("ga.n").as("na"), col("gb.n").as("nb"))
-      .agg(count(lit(1)).as("inter"))
+  /** q43's core over any (doc_id, source, text) frame. */
+  private[ops] def ngramJaccardFrom(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
+      .filter($"source".isNotNull)
+      .repartition(spark.sparkContext.defaultParallelism, $"source")
+      .groupBy($"source")
+      .agg(collect_list(struct($"doc_id", $"text")).as("blk"))
+      .select(explode(
+        graft.functions.TextExprs.jaccardBlockPairs($"blk", 4, 25)).as("p"))
+      .select($"p.doc_a", $"p.doc_b", $"p.inter", $"p.na", $"p.nb")
       .withColumn("jaccard",
         $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
-      .filter($"jaccard" >= 0.5)
-      .select($"doc_a", $"doc_b", $"inter", $"na", $"nb", $"jaccard")
+      .repartition(1).orderBy($"doc_a", $"doc_b")
   }
 
   val queries: Map[String, Q] = Map(

@@ -39,9 +39,9 @@ object Round10 {
     * [[graft.functions.DistinctWordGrams]] expression — per-document
     * dedup happens DURING the scan, so the (doc, gram) `.distinct()`
     * exchange (one row per gram position) does not exist in this plan
-    * at all (the q43/DistinctGramKeys precedent). The fan-out is
-    * linear, rebalanced before exploding; nothing forms doc×doc
-    * pairs. */
+    * at all (q43's block kernel dedups each document's grams the same
+    * way). The fan-out is linear, rebalanced before exploding; nothing
+    * forms doc×doc pairs. */
   val q167NgramDecontam: Q = (spark, dir) => {
     import spark.implicits._
     val docs = Dedup.fanoutReady(Tables.documents(spark, dir))

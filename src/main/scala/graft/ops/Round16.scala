@@ -57,6 +57,18 @@ object Round16 {
     org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
   }
 
+  /** `frames` planned with the MV rewrite off. Each optimized plan is
+    * fixed before the setting is restored, so an audit's rule-off side
+    * still reads the source table when it is collected later; a frame
+    * first planned at collect time would be rewritten too, and the audit
+    * would compare the view with itself. */
+  private def plannedRewriteOff(spark: SparkSession)(
+      frames: => Seq[DataFrame]): Seq[DataFrame] = {
+    spark.conf.set("spark.graft.mv.rewrite", "false")
+    try frames.map { f => f.queryExecution.optimizedPlan; f }
+    finally spark.conf.unset("spark.graft.mv.rewrite")
+  }
+
   /** Insert rows [lo, hi) of the generative corpus as ONE ordered file. */
   private def insertRange(spark: SparkSession, cat: String, lo: Int,
       hi: Int): Unit = {
@@ -753,10 +765,8 @@ object Round16 {
       }
       val viaMv = run()
       val (mvScanned, mvAggregated) = facts(viaMv)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val viaSource = run()
+      val Seq(viaSource) = plannedRewriteOff(spark)(Seq(run()))
       val (offScanned, offAggregated) = facts(viaSource)
-      spark.conf.unset("spark.graft.mv.rewrite")
       // soundness: the rewrite must be invisible in the RESULT
       require(OpsUtil.sameRowsLocal(viaMv, viaSource),
         "mv rewrite changed the query result")
@@ -1055,11 +1065,12 @@ object Round16 {
       val (mvScansView, mvScansSrc, mvAggregated) = facts(viaMv)
       val globalViaMv = global()
       val (gScansView, gScansSrc, _) = facts(globalViaMv)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val viaSource = rollup()
+      val Seq(viaSource, globalViaSource) =
+        plannedRewriteOff(spark)(Seq(rollup(), global()))
       val (offScansView, offScansSrc, _) = facts(viaSource)
-      val globalViaSource = global()
-      spark.conf.unset("spark.graft.mv.rewrite")
+      require(Seq(viaSource, globalViaSource).map(facts).forall {
+        case (view, src, _) => src && !view
+      }, "an mv roll-up audit's rule-off side must scan the source table")
       // soundness: the roll-up must be invisible in the RESULT
       require(OpsUtil.sameRowsLocal(viaMv, viaSource),
         "mv roll-up rewrite changed the grouped query result")
@@ -1294,10 +1305,11 @@ object Round16 {
       val (pScansView, pScansSrc) = facts(viaMv)
       val globalViaMv = pinnedGlobal()
       val (gScansView, gScansSrc) = facts(globalViaMv)
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val viaSource = pinned()
-      val globalViaSource = pinnedGlobal()
-      spark.conf.unset("spark.graft.mv.rewrite")
+      val Seq(viaSource, globalViaSource) =
+        plannedRewriteOff(spark)(Seq(pinned(), pinnedGlobal()))
+      require(Seq(viaSource, globalViaSource).map(facts).forall {
+        case (view, src) => src && !view
+      }, "a historical mv audit's rule-off side must scan the source table")
       require(OpsUtil.sameRowsLocal(viaMv, viaSource),
         "historical rewrite changed the pinned grouped result")
       require(OpsUtil.sameRowsLocal(globalViaMv, globalViaSource),

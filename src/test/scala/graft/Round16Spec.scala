@@ -1488,4 +1488,26 @@ class Round16Spec extends SparkSpec {
         "the watermark must end at the source head")
     } finally dropCatalog(cat, wh)
   }
+
+  test("mv audits q282 and q285 compare the view with a rule-off side " +
+      "that scans the source table") {
+    // each query fixes its rule-off plans before restoring the rewrite,
+    // and requires that every rule-off frame scans the source table and
+    // never the view; a frame first planned at collect time would be
+    // rewritten, and the require would fail the query
+    val q282 = ops.Round16.q282MvRollup(spark, sf).collect()
+    assert(q282.nonEmpty)
+    q282.foreach { r =>
+      assert(r.getAs[Boolean]("rollup_scans_view") &&
+        !r.getAs[Boolean]("rollup_scans_source"))
+      assert(!r.getAs[Boolean]("fallback_scans_view") &&
+        r.getAs[Boolean]("fallback_scans_source"))
+    }
+    val q285 = ops.Round16.q285MvTimeTravel(spark, sf).collect()
+    assert(q285.nonEmpty)
+    q285.foreach { r =>
+      assert(r.getAs[Boolean]("pinned_scans_view") &&
+        !r.getAs[Boolean]("pinned_scans_source"))
+    }
+  }
 }
