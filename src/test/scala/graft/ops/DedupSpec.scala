@@ -6,8 +6,10 @@ import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, Repartition}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -91,6 +93,12 @@ class DedupSpec extends SparkSpec {
       (a, b, i, na, nb, j)
   }.toSet
 
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case other => other +: other.children.flatMap(planNodes)
+  }
+
   private val textSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("source", StringType),
     StructField("text", StringType)))
@@ -107,11 +115,19 @@ class DedupSpec extends SparkSpec {
     assert(kernelPairs(docs) == bruteForce(docs))
   }
 
-  test("the 2:1 bound drops a pair just past 2:1 before its overlap is counted; it is no true match") {
+  test("jaccardPairs prunes a pair just past 2:1 in the join; it is no true match") {
     // B ⊂ A with |A| = 2|B| + 1: the best overlap possible at that ratio
     val docs = Seq((3L, "s", (20L to 26L).toSet), (4L, "s", Set(20L, 21L, 22L)))
     assert(bruteForce(docs).isEmpty, "3/7 < 0.5: not a true match")
-    assert(jaccardPairs(gramFrame(docs)).collect().isEmpty)
+    val pairs = jaccardPairs(gramFrame(docs))
+    assert(pairs.collect().isEmpty)
+    val joins = planNodes(pairs.queryExecution.executedPlan).collect {
+      case j: BroadcastHashJoinExec => j
+    }
+    assert(joins.nonEmpty)
+    assert(joins.map(_.metrics("numOutputRows").value).sum == 0,
+      "the size-ratio bound must drop the pair before the aggregate counts it")
+    // the kernel keeps the same bound
     val blk = docs.map { case (d, _, gs) => (Option(d), gs.toArray) }.toArray
     assert(JaccardBlockPairs.overlaps(blk, Int.MaxValue).isEmpty,
       "the size-ratio bound must drop the pair before its overlap is counted")
