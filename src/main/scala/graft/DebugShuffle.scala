@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only steady-state prober: run the named queries N times each in
-  * one JVM (same configs as Bench) and print per-run times — separates
+  * one JVM ([[Session.local]], as Bench) and print per-run times — separates
   * plan cost from JIT warmup and host noise before any optimization
   * decision. Usage:
   *   runMain graft.DebugShuffle q43_ngram_jaccard q79_dup_clusters
@@ -14,14 +12,7 @@ object DebugShuffle {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q43_ngram_jaccard", "q41_minhash_lsh", "q79_dup_clusters",

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for named queries (or all),
   * to audit pushdown / broadcast / codegen per the scale checklist. The
-  * session carries [[Bench]]'s planning settings at local[4], so a dump
-  * shows the plan the benchmark times (AQE sizes reduce stages by bytes,
+  * session is [[Session.local]] at local[4], so a dump shows the plan
+  * the benchmark times (AQE sizes reduce stages by bytes,
   * not by parallelism). Each query runs before it is dumped, so the dump
   * is AQE's final plan: the exchanges, broadcasts and query stages the
   * run actually used. Caches are dropped between queries, as in Bench.
@@ -15,15 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.contains(name)) {

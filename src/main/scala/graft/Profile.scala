@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler (guide §1): split each query's wall time into DataFrame
   * CONSTRUCTION (fn call: schema inference + logical plan), PLANNING
@@ -20,15 +19,7 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = args.toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,7 @@ object Verify {
     // the driver always calls with exactly (sfDir, outDir) → full run.
     val only: Set[String] = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Same AQE setting as Bench: reduce-stage task counts follow data
-      // size, not the defaultParallelism floor (see Bench.scala).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // See Bench.scala: avoid compiled-class cache thrash across the
-      // full query surface (janino recompiles inside tasks once evicted).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.buffer.pageSize", "2m") // see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

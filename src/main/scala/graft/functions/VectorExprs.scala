@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.functions.{floor, transform}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -207,6 +208,25 @@ case class SignBits(child: Expression, planes: Seq[Seq[Long]])
 }
 
 object VectorExprs {
+  /** float[] → exact integer vector (thousandths): the cross-engine
+    * quantization every vector query applies before its integer dots. */
+  def quantize(e: Column): Column =
+    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
+
+  /** DuckDB mirror of [[quantize]] over the `embedding` column. */
+  val quantizeSql: String =
+    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
+
+  /** DuckDB mirror of [[dotLong]] over two quantized list expressions. */
+  def dotSql(a: String, b: String): String =
+    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
+
+  /** DuckDB mirror of [[cosineLong]]: the composed three-dot form. */
+  def cosineSql(a: String, b: String): String =
+    s"""CAST(${dotSql(a, b)} AS DOUBLE)
+       |    / (sqrt(CAST(${dotSql(a, a)} AS DOUBLE))
+       |       * sqrt(CAST(${dotSql(b, b)} AS DOUBLE)))""".stripMargin
+
   /** Column API for [[DotProductLong]]. */
   def dotLong(a: Column, b: Column): Column =
     GraftBridge.column(DotProductLong(

@@ -123,6 +123,30 @@ object OpsUtil {
     schema.fields.find(f => unsafe(f.dataType))
   }
 
+  /** Run `body` against a scratch versioned warehouse: a fresh temp
+    * directory registered as GraftCatalog `<tag>_<dir name>` (the dir's
+    * nonce keeps repeated calls apart). Afterwards, normal return or not,
+    * both catalog conf keys are unset, the instantiated catalog is
+    * evicted and the warehouse is deleted, so the session is left as it
+    * was found. A body that returns a frame must collect it first
+    * ([[driverLiteral]]): its tables are gone once this returns. */
+  def withScratchCatalog[T](spark: SparkSession, tag: String)(
+      body: (String, java.nio.file.Path) => T): T = {
+    val wh = java.nio.file.Files.createTempDirectory(s"graft_$tag")
+    val cat = tag + "_" +
+      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
+    try {
+      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+      body(cat, wh)
+    } finally {
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+      org.apache.spark.sql.GraftBridge.dropCatalog(spark, cat)
+      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
+    }
+  }
+
   /** Materialize a SMALL (≤ a few hundred rows — profile/audit-sized)
     * result on the driver and rebuild it as a local DataFrame with the
     * identical schema. Lets a query unpersist its corpus-sized caches

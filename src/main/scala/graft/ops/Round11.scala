@@ -343,8 +343,7 @@ object Round11 {
   val q203EmbeddingMoments: Q = (spark, dir) => {
     import spark.implicits._
     val d = 8
-    val e = transform(col("embedding"),
-      x => floor(x.cast("double") * 1000).cast("long"))
+    val e = graft.functions.VectorExprs.quantize(col("embedding"))
     val base = Tables.embeddings(spark, dir).select(e.as("e"))
     val sumCols =
       (for (i <- 0 until d)

@@ -103,16 +103,13 @@ object Round12 {
     * regenerates the exact final table from range(). A fresh scratch
     * warehouse (and catalog name) per invocation keeps repeated bench /
     * verify calls independent; the final 33-row table is collected via
-    * [[OpsUtil.driverLiteral]] so the scratch warehouse and its two
-    * catalog confs can be torn down before returning — repeated calls
-    * leak neither /tmp dirs nor session-conf entries. */
+    * [[OpsUtil.driverLiteral]] so [[OpsUtil.withScratchCatalog]] can
+    * tear the warehouse, its catalog confs and the catalog instance down
+    * before returning — repeated calls leak neither /tmp dirs,
+    * session-conf entries nor catalogs. */
   val q214RowLevelMerge: Q = (spark, dir) => {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_rl_q214")
-    val cat = "rl_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    try OpsUtil.withScratchCatalog(spark, "q214") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .writeTo(s"$cat.corpus").create()
@@ -133,12 +130,7 @@ object Round12 {
         spark.table(s"$cat.corpus")
           .select($"doc_id", $"title", $"fp", $"n_words")
           .orderBy($"doc_id"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      spark.catalog.dropTempView("q214_updates")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-    }
+    } finally spark.catalog.dropTempView("q214_updates")
   }
 
   val queries: Map[String, Q] = Map(

@@ -22,26 +22,20 @@ import graft.sources.{GraftTableMeta, GraftVersions}
   * All three build a scratch versioned table from the generative corpus
   * (every column a closed-form function of doc_id, so the DuckDB oracle
   * regenerates each snapshot from range()), mutate it through the SQL
-  * row-level commands, and tear the scratch warehouse down in a finally
-  * block after collecting their audit-sized result via
-  * [[OpsUtil.driverLiteral]] (the q214 lifecycle pattern).
+  * row-level commands inside [[OpsUtil.withScratchCatalog]], which
+  * tears the scratch warehouse down after they collect their audit-sized
+  * result via [[OpsUtil.driverLiteral]].
   */
 object Round13 {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Build the round's shared version history in a fresh scratch
-    * warehouse: v0 empty (CREATE versioned), v1 = rows [0,30) (CTAS
-    * append), v2 = UPDATE (n_words=0 where doc_id<5), v3 = DELETE
-    * (doc_id>=20), v4 = INSERT of generative rows [40,45). Returns the
-    * catalog name; the caller reads and must clean up via [[teardown]].
+  /** Build the round's shared version history as table `t` of the
+    * scratch catalog `cat`: v0 empty (CREATE versioned), v1 = rows
+    * [0,30) (CTAS append), v2 = UPDATE (n_words=0 where doc_id<5), v3 =
+    * DELETE (doc_id>=20), v4 = INSERT of generative rows [40,45). The
+    * caller owns the catalog through [[OpsUtil.withScratchCatalog]].
     */
-  private def buildHistory(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_ver_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+  private def buildHistory(spark: SparkSession, cat: String): Unit = {
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", "30").load()
       .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -50,17 +44,9 @@ object Round13 {
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", "45").load()
       .filter(col("doc_id") >= 40)
-      .createOrReplaceTempView(s"${tag}_inserts")
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM ${tag}_inserts")
-    spark.catalog.dropTempView(s"${tag}_inserts")
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
+      .createOrReplaceTempView(s"${cat}_inserts")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM ${cat}_inserts")
+    spark.catalog.dropTempView(s"${cat}_inserts")
   }
 
   // ---------------------------------------------------------------------
@@ -75,8 +61,8 @@ object Round13 {
     * read is a manifest-scoped file scan + one map-side-combined global
     * aggregate; nothing shuffles wider than one row per version. */
   val q216TimeTravel: Q = (spark, dir) => {
-    val (cat, wh) = buildHistory(spark, "q216")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q216") { (cat, wh) =>
+      buildHistory(spark, cat)
       val log = GraftVersions.listVersions(wh.resolve("t"))
       val perVersion = log.map { v =>
         spark.sql(
@@ -87,7 +73,7 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -105,8 +91,8 @@ object Round13 {
     * manifests can contain changed rows, so each EXCEPT scans the
     * changed files, not the corpus. */
   val q217VersionChanges: Q = (spark, dir) => {
-    val (cat, wh) = buildHistory(spark, "q217")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q217") { (cat, wh) =>
+      buildHistory(spark, cat)
       val log = GraftVersions.listVersions(wh.resolve("t"))
       val transitions = log.sliding(2).map { case Seq(a, b) =>
         def snap(v: Long) = spark.sql(
@@ -124,7 +110,7 @@ object Round13 {
       OpsUtil.driverLiteral(
         transitions.toDF("to_version", "op", "rows_added", "rows_removed",
           "words_delta").orderBy("to_version"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -140,8 +126,8 @@ object Round13 {
     * difference), never a data rewrite — the property that makes
     * retention affordable on a 100 TB corpus. */
   val q218SnapshotRetention: Q = (spark, dir) => {
-    val (cat, wh) = buildHistory(spark, "q218")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q218") { (cat, wh) =>
+      buildHistory(spark, cat)
       val tdir = wh.resolve("t")
       val before = GraftVersions.listVersionNumbers(tdir)
       val stats = GraftVersions.vacuum(tdir, keepLast = 2)
@@ -170,7 +156,7 @@ object Round13 {
         "oldest_retained", "newest_retained", "expired_read_fails",
         "disk_matches_manifests", "oldest_rows", "oldest_sum_words",
         "live_rows", "live_sum_words"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -190,12 +176,8 @@ object Round13 {
     * a feed that fails to terminate is stopped and thrown, never hung.
     */
   val q219VersionFeed: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q219")
     val sink = Files.createTempDirectory("graft_feed_q219")
-    val cat = "q219_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    try OpsUtil.withScratchCatalog(spark, "q219") { (cat, wh) =>
       def insertRange(lo: Int, hi: Int): Unit = {
         spark.read.format("graft.sources.GraftDocsSource")
           .option("rows", hi.toString).load()
@@ -232,12 +214,7 @@ object Round13 {
       drain()
       val incr = OpsUtil.driverLiteral(sinkState("b_incremental"))
       initial.unionByName(incr).orderBy("phase")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
   }
 
   // ---------------------------------------------------------------------
@@ -255,12 +232,8 @@ object Round13 {
     * 100 TB this is the nightly OPTIMIZE: one read + one write of
     * live data, commit work proportional to #files, no log rewrite. */
   val q220Compaction: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q220")
     val sink = Files.createTempDirectory("graft_feed_q220")
-    val cat = "q220_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    try OpsUtil.withScratchCatalog(spark, "q220") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -297,12 +270,7 @@ object Round13 {
         feed.getLong(0), feed.getLong(1)
       )).toDF("files_before", "files_after", "live_rows", "live_sum_words",
         "precompact_rows", "feed_rows", "feed_sum_words"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
   }
 
   // ---------------------------------------------------------------------
@@ -319,11 +287,7 @@ object Round13 {
     * The incident-recovery path every curated corpus eventually needs:
     * rewind is O(1) in data, and nothing is lost until vacuum. */
   val q221Restore: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q221")
-    val cat = "q221_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q221") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -344,10 +308,6 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -364,11 +324,7 @@ object Round13 {
     * and restore re-references v1's 8. Audit-sized scan: one partition
     * over #versions manifest lines, never data. */
   val q222History: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q222")
-    val cat = "q222_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q222") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -383,10 +339,6 @@ object Round13 {
       OpsUtil.driverLiteral(spark.sql(
         s"""SELECT version, op, data_change, n_files
            |FROM $cat.t.history ORDER BY version""".stripMargin))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -408,11 +360,7 @@ object Round13 {
     * oracle hash, not just a perf trend. At 100 TB this is the
     * difference between touching 3 files and 30,000. */
   val q223FileSkipping: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q223")
-    val cat = "q223_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q223") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").option("partitions", "2").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -446,10 +394,6 @@ object Round13 {
       )).toDF("total_files", "planned_files_range", "rows_range",
         "sum_words_range", "files_after_compact", "planned_after_compact",
         "rows_after_compact", "sum_words_after_compact"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -474,11 +418,7 @@ object Round13 {
     * single-column sort would make one axis perfect and leave the
     * other unprunable. */
   val q224ZOrder: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q224")
-    val cat = "q224_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q224") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "256").load()
         .repartition(8, col("fp"))
@@ -512,10 +452,6 @@ object Round13 {
       )).toDF("files_before", "planned_id_before", "planned_fp_before",
         "files_after", "planned_id_after", "planned_fp_after",
         "rows_id", "sum_words_id", "rows_fp", "sum_words_fp"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -539,12 +475,8 @@ object Round13 {
     * per batch proportional to that batch's files, replay-safe with
     * no reconciliation job. */
   val q225StreamSink: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q225")
     val cp = Files.createTempDirectory("graft_ckpt_q225")
-    val cat = "q225_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    try OpsUtil.withScratchCatalog(spark, "q225") { (cat, wh) =>
       def insertRange(lo: Int, hi: Int): Unit = {
         spark.read.format("graft.sources.GraftDocsSource")
           .option("rows", hi.toString).load()
@@ -585,12 +517,7 @@ object Round13 {
           lit(txns.map(_._1).distinct.length.toLong))
         .withColumn("max_epoch", lit(txns.map(_._2).max))
       OpsUtil.driverLiteral(stats)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   // ---------------------------------------------------------------------
@@ -610,11 +537,7 @@ object Round13 {
     * the layout was NOT sorted by. Planned counts ride in the hashed
     * row (q223 pattern). */
   val q226BloomSkipping: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q226")
-    val cat = "q226_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q226") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "256").option("partitions", "8").load()
         .writeTo(s"$cat.t")
@@ -641,10 +564,6 @@ object Round13 {
       )).toDF("total_files", "planned_fp_point", "rows_fp_point",
         "words_fp_point", "planned_title_point", "rows_title_point",
         "words_title_point", "planned_fp_missing", "rows_fp_missing"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -664,11 +583,7 @@ object Round13 {
     * the cheapest possible quality gate: bad rows are rejected at the
     * door instead of quarantined by a later audit pass over 100 TB. */
   val q227CheckConstraints: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q227")
-    val cat = "q227_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q227") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .writeTo(s"$cat.t")
@@ -701,10 +616,6 @@ object Round13 {
         state.getLong(0), state.getLong(1), state.getLong(2)
       )).toDF("bad_insert_rejected", "bad_update_rejected", "n_versions",
         "rows_live", "sum_words_live", "sum_ids_live"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -729,11 +640,7 @@ object Round13 {
     * gigabyte-files commits a few KB of masks instead of rewriting
     * 100 TB; the read-side cost is a sorted-mask skip per file. */
   val q228MorDelete: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q228")
-    val cat = "q228_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q228") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -766,10 +673,6 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -795,11 +698,7 @@ object Round13 {
     * q228. At 100 TB, tier 1 is how `DELETE WHERE date < retention`
     * on a date-clustered corpus finishes in milliseconds. */
   val q229MetadataDelete: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q229")
-    val cat = "q229_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q229") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -831,10 +730,6 @@ object Round13 {
       val disk = diskFiles
       OpsUtil.driverLiteral(perVersion
         .withColumn("disk_files", lit(disk)).orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -856,11 +751,7 @@ object Round13 {
     * is what turns "join the corpus to a curated exclusion list" from
     * an accidental full shuffle into a broadcast hash join. */
   val q230StatsCbo: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q230")
-    val cat = "q230_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q230") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "500").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -884,10 +775,6 @@ object Round13 {
         statsBefore, statsAfter, joined.getLong(0), joined.getLong(1)
       )).toDF("stats_rows_before", "stats_rows_after",
         "n_joined", "sum_words_joined"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -907,11 +794,7 @@ object Round13 {
     * `masked_rows` > 0 and `final_op`. Behavior, not just storage, is
     * what ALTER mutates; every count is closed-form over range(30). */
   val q231AlterProperties: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q231")
-    val cat = "q231_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q231") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -954,10 +837,6 @@ object Round13 {
       )).toDF("alter_ok", "alter_rejected", "bad_insert_rejected",
         "versions_unmoved", "final_op", "masked_rows",
         "rows_live", "sum_ids_live", "sum_words_live"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -983,11 +862,7 @@ object Round13 {
     * only the changed rows' bytes — vs copy-on-write's rewrite of
     * every touched gigabyte. */
   val q232MorUpdate: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q232")
-    val cat = "q232_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q232") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -1016,10 +891,6 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -1045,13 +916,9 @@ object Round13 {
     * assignment, CDC reconciliation — entirely off the wire, even as
     * the tables keep absorbing deletes and compactions. */
   val q233BucketedSpj: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q233")
-    val cat = "q233_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
     val confKeys = Seq("spark.sql.sources.v2.bucketing.enabled")
     val prev = confKeys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    try OpsUtil.withScratchCatalog(spark, "q233") { (cat, wh) =>
       spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       def mkTable(name: String, rows: Int): Unit =
         spark.read.format("graft.sources.GraftDocsSource")
@@ -1087,9 +954,6 @@ object Round13 {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None)    => spark.conf.unset(k)
       }
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -1111,11 +975,7 @@ object Round13 {
     * touching 0.1% of rows commits masks + the changed rows' bytes,
     * not a rewrite of every touched file. */
   val q234MorMerge: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q234")
-    val cat = "q234_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q234") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .repartitionByRange(3, col("doc_id"))
@@ -1147,10 +1007,6 @@ object Round13 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(perVersion.orderBy("version"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -1169,11 +1025,7 @@ object Round13 {
     * masks (2), and the residue-class doc_id envelope (min=b,
     * max=36+b) — every cell closed-form. */
   val q235FilesTable: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q235")
-    val cat = "q235_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q235") { (cat, wh) =>
       // 2 input partitions × 4 buckets → 8 files of 5 rows: the
       // scattered delete masks 1 row per file, never a whole file (a
       // fully-masked file would drop and shrink the physical counters
@@ -1191,10 +1043,6 @@ object Round13 {
            |  MIN(min_doc_id) AS min_id, MAX(max_doc_id) AS max_id,
            |  SUM(rows) - SUM(masked) AS rows_live
            |FROM $cat.t.files GROUP BY bucket ORDER BY bucket""".stripMargin))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -1215,11 +1063,7 @@ object Round13 {
     * a trend. At 100 TB: maintenance runs from the same SQL gateway as
     * queries, no driver-side tooling required. */
   val q236Procedures: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q236")
-    val cat = "q236_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q236") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -1241,10 +1085,6 @@ object Round13 {
         "restored_version", "restore_new_version", "restore_n_files",
         "vacuum_expired", "vacuum_deleted", "oldest_retained",
         "rows_live", "sum_ids_live"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
@@ -1266,11 +1106,7 @@ object Round13 {
     * folds the PINNED manifest. The pushed/declined flags come off
     * the executed plans, so a pushdown regression breaks the hash. */
   val q237ManifestAgg: Q = (spark, dir) => {
-    val wh = Files.createTempDirectory("graft_ver_q237")
-    val cat = "q237_" + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    OpsUtil.withScratchCatalog(spark, "q237") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "40").load()
         .repartitionByRange(4, col("doc_id"))
@@ -1301,10 +1137,6 @@ object Round13 {
       )).toDF("count_pushed", "n_before", "minmax_pushed", "min_id",
         "max_words", "where_pushed", "count_pushed_after", "n_after",
         "minmax_pushed_after", "min_id_after", "n_asof_v1"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 

@@ -22,23 +22,6 @@ import graft.sources.GraftVersions
 object Round14 {
   type Q = (SparkSession, String) => DataFrame
 
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r14_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
   // ---------------------------------------------------------------------
   // q238: ADD COLUMN schema evolution, audited through time travel
   // ---------------------------------------------------------------------
@@ -63,8 +46,7 @@ object Round14 {
     * phase read is a manifest-scoped scan + one map-side-combined
     * global aggregate. */
   val q238SchemaEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q238")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q238") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "20").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -109,7 +91,7 @@ object Round14 {
       require(ops == Seq("enable", "append", "add-column", "append",
         "update"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -241,9 +223,8 @@ object Round14 {
     * is the incremental-materialization feed: a downstream aggregate
     * consumes exact row deltas instead of re-reading snapshots. */
   val q240ChangeFeedImages: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q240")
     val sink = Files.createTempDirectory("graft_cdf_q240")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "q240") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "12").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -285,10 +266,7 @@ object Round14 {
       val second = OpsUtil.driverLiteral(sinkState("b_second"))
       first.unionByName(second)
         .orderBy("phase", "commit_version", "change_type")
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
   }
 
   // ---------------------------------------------------------------------
@@ -320,8 +298,7 @@ object Round14 {
     * and every phase read is a manifest-scoped scan + one
     * map-side-combined aggregate. */
   val q241SchemaMutation: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q241")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q241") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "12").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -383,7 +360,7 @@ object Round14 {
         "append", "rename-column", "append", "drop-column", "add-column",
         "append"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -408,8 +385,7 @@ object Round14 {
     * postdates. Scale shape: like every mutation, cost is one property
     * write + one manifest line regardless of table size. */
   val q242TypeWidening: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q242")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q242") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "8").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -447,7 +423,7 @@ object Round14 {
       require(ops == Seq("enable", "append", "add-column", "append",
         "widen-column", "append"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -476,8 +452,7 @@ object Round14 {
     * DEFAULT on a 100 TB table is instant where a COW backfill would
     * rewrite the world. */
   val q243ColumnDefaults: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q243")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q243") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -531,7 +506,7 @@ object Round14 {
       require(ops == Seq("enable", "append", "add-column", "add-column",
         "append", "append", "append"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -553,8 +528,7 @@ object Round14 {
     * lines, no data IO) — the dev/staging-fork and experiment-branch
     * workflow Delta ships as SHALLOW CLONE. */
   val q244ShallowClone: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q244")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q244") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.s").tableProperty("versioned", "true")
@@ -604,7 +578,7 @@ object Round14 {
           lit(if (vacuumSafe) 1L else 0L).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -620,8 +594,7 @@ object Round14 {
     * corpus run X trained on" stays addressable by name, immune to
     * nightly retention, for as long as the tag lives. */
   val q245TableTags: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q245")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q245") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -667,7 +640,7 @@ object Round14 {
           lit(cVers).as("n_versions"), lit(cOk).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -686,8 +659,7 @@ object Round14 {
     * 4-column shape. The registry's append-only rules still gate every
     * change — a boolean source column fails the merge loudly. */
   val q246MergeEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q246")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q246") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -726,7 +698,7 @@ object Round14 {
           .unionByName(snap("b_post_merge", spark.table(s"$cat.t")))
           .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -749,8 +721,7 @@ object Round14 {
     * fork and one rename-per-file to publish, regardless of table
     * size. */
   val q247BranchWap: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q247")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q247") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -798,7 +769,7 @@ object Round14 {
           lit(-1L).as("branch_rows"), lit(cOk).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -815,8 +786,7 @@ object Round14 {
     * forever". Cutoffs here are taken FROM the commit log's own
     * strictly-increasing timestamps, so the audit is deterministic. */
   val q248ExpireSnapshots: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q248")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q248") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -864,7 +834,7 @@ object Round14 {
           lit(bTag).as("tag_rows"), lit(bOk).as("ok")))
         .orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -898,8 +868,7 @@ object Round14 {
     * monotone per-file segment walk in the reader — nothing global,
     * nothing per-row on disk. */
   val q249RowLineage: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q249")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q249") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "18").load()
       // one sorted file per commit: ids are then doc_id-aligned, which
@@ -946,7 +915,7 @@ object Round14 {
           col("_row_commit_version").as("row_cv"))
         .orderBy("doc_id")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -968,8 +937,7 @@ object Round14 {
     * Scale shape: one directory listing + one log read under the table
     * lock; never a data scan. */
   val q250RemoveOrphans: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q250")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q250") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "12").load()
       docs.filter(col("doc_id") < 8).coalesce(1).sortWithinPartitions("doc_id")
@@ -1005,7 +973,7 @@ object Round14 {
         "planted debris must be gone after the permissive sweep")
       val audit = a.unionByName(b).orderBy("phase")
       OpsUtil.driverLiteral(audit)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1032,8 +1000,7 @@ object Round14 {
     * never to table size; this is the primitive incremental pipelines
     * are built from at 100 TB. */
   val q251BatchCdf: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q251")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q251") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "14").load()
       docs.filter(col("doc_id") < 8).coalesce(1).sortWithinPartitions("doc_id")
@@ -1068,7 +1035,7 @@ object Round14 {
           "n_words")
         .orderBy("scope", "commit_version", "change_type", "doc_id")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1094,8 +1061,7 @@ object Round14 {
     * materialized-view incremental maintenance, expressed in plain
     * DataFrame algebra over the connector's CDF. */
   val q252IncrementalAgg: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q252")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q252") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "18").load()
       docs.filter(col("doc_id") < 10).coalesce(1).sortWithinPartitions("doc_id")
@@ -1153,7 +1119,7 @@ object Round14 {
       require(OpsUtil.sameRowsLocal(refreshed, full),
         "incremental refresh must equal the full recompute")
       OpsUtil.driverLiteral(refreshed)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1179,8 +1145,7 @@ object Round14 {
     * exactly Iceberg's model. The audit tracks rows / file count /
     * distinct spec count through create → evolve+append → optimize. */
   val q253PartitionEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q253")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q253") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(2, doc_id))
@@ -1216,7 +1181,7 @@ object Round14 {
         "compact"), s"unexpected version log: $ops")
       OpsUtil.driverLiteral(
         a.unionByName(b).unionByName(c).orderBy("phase"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1238,8 +1203,7 @@ object Round14 {
     * of the six files. The rollup pins all of it closed-form —
     * per-group physical rows, DV masks, and live rows. */
   val q254PartitionsTable: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q254")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q254") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(2, doc_id))
@@ -1257,7 +1221,7 @@ object Round14 {
       OpsUtil.driverLiteral(spark.sql(
         s"""SELECT spec, bucket, files, rows, masked, live_rows
            |FROM $cat.t.partitions ORDER BY spec, bucket""".stripMargin))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1289,8 +1253,7 @@ object Round14 {
     * today's feed`) and MOR turns that full-table verb into masks +
     * changed bytes instead of a table rewrite. */
   val q255MergeMatrix: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q255")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q255") { (cat, wh) =>
       val base = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .repartitionByRange(3, col("doc_id"))
@@ -1328,7 +1291,7 @@ object Round14 {
             col("sum_doc_id"), lit(masks(t)).as("masked_rows"))
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("mode"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1352,8 +1315,7 @@ object Round14 {
     * relation must show all three with exactly those versions and
     * dev's base_version = 2 (the main version fast_forward needs). */
   val q256RefsTable: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q256")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q256") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "10").load()
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -1364,7 +1326,7 @@ object Round14 {
       OpsUtil.driverLiteral(spark.sql(
         s"""SELECT name, type, version, base_version
            |FROM $cat.t.refs ORDER BY name""".stripMargin))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1389,8 +1351,7 @@ object Round14 {
     * entirely from this repo's own verified primitives (q251's batch
     * feed, q255's merge matrix). */
   val q257CdcReplication: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q257")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q257") { (cat, wh) =>
       val docs = spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "25").load()
       docs.filter(col("doc_id") < 20).orderBy("doc_id").coalesce(2)
@@ -1439,7 +1400,7 @@ object Round14 {
               col("sum_doc_id"), lit(applied).as("changes_applied"))
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("mode"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1470,8 +1431,7 @@ object Round14 {
     * read-side cost is a per-row binary search against the file's value
     * set, only on files the delete actually touched. */
   val q258EqualityDelete: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q258")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q258") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "30").load()
         .repartitionByRange(3, col("doc_id"))
@@ -1498,7 +1458,7 @@ object Round14 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("version"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1522,9 +1482,8 @@ object Round14 {
     * after the bootstrap; this is the Delta streaming-CDF-to-replica
     * pattern composed from this repo's own verified feed and merge. */
   val q259StreamingReplication: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q259")
     val ckpt = Files.createTempDirectory("graft_rep_q259")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "q259") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "15").load().coalesce(1)
         .writeTo(s"$cat.s").tableProperty("versioned", "true")
@@ -1590,10 +1549,7 @@ object Round14 {
       drain() // resumes from the checkpointed commit — no re-reads
       val b = audit("b_second_drain")
       a.unionByName(b).orderBy("phase")
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
   }
 
   // ---------------------------------------------------------------------
@@ -1616,8 +1572,7 @@ object Round14 {
     * semi-join against the candidate files — manifest stats still
     * prune the scan side, and the commit stays one manifest advance. */
   val q260SubqueryDml: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q260")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q260") { (cat, wh) =>
       spark.read.format("graft.sources.GraftDocsSource")
         .option("rows", "20").load().coalesce(2)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -1647,7 +1602,7 @@ object Round14 {
              |FROM $cat.t VERSION AS OF ${v.version}""".stripMargin)
       }.reduce(_ unionByName _)
       OpsUtil.driverLiteral(audit.orderBy("version"))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   val queries: Map[String, Q] = Map(

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.GraftVersions
@@ -34,23 +32,6 @@ import graft.sources.GraftVersions
 object Round15 {
   type Q = (SparkSession, String) => DataFrame
 
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r15_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
   // ---------------------------------------------------------------------
   // q261: generated columns — declared derivation, write-path enforced
   // ---------------------------------------------------------------------
@@ -77,8 +58,7 @@ object Round15 {
     * expressions itself — the engine's declared derivation must equal
     * the oracle's inline one. */
   val q261GeneratedColumns: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q261")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q261") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -108,7 +88,7 @@ object Round15 {
            |  COUNT(DISTINCT title_tag) AS n_tags
            |FROM $cat.t GROUP BY wc_bucket ORDER BY wc_bucket""".stripMargin)
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -134,8 +114,7 @@ object Round15 {
     * row → id is deterministic; the oracle computes the same ids from
     * `row_number()` and the block constant. */
   val q262IdentityColumns: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q262")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q262") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -162,7 +141,7 @@ object Round15 {
         s"""SELECT doc_id, rid, CAST(n_words AS BIGINT) AS n_words
            |FROM $cat.t ORDER BY doc_id""".stripMargin)
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -179,8 +158,7 @@ object Round15 {
     * relation by partition value pins file counts and row sums to
     * their closed forms. */
   val q263FilesPartitionFace: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q263")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q263") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -203,7 +181,7 @@ object Round15 {
            |  SUM(rows) AS n_rows
            |FROM $cat.t.files
            |GROUP BY partition_value ORDER BY partition_value""".stripMargin))
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------

@@ -40,23 +40,6 @@ import org.apache.spark.sql.functions._
 object Round16 {
   type Q = (SparkSession, String) => DataFrame
 
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r16_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
   /** `frames` planned with the MV rewrite off. Each optimized plan is
     * fixed before the setting is restored, so an audit's rule-off side
     * still reads the source table when it is collected later; a frame
@@ -105,8 +88,7 @@ object Round16 {
     * of `_row_id` — concat splices its members' segments, so ids ride
     * through compaction byte-identically). */
   val q265AutoCompact: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q265")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q265") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -132,7 +114,7 @@ object Round16 {
         .withColumn("n_compacts", lit(hist.getLong(0)))
         .withColumn("max_live_files", lit(hist.getInt(1).toLong))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -158,8 +140,7 @@ object Round16 {
     * sees, not a side channel. (The HLL degrade past the cap and the
     * build-side flip it buys the CBO are pinned in Round16Spec.) */
   val q266NdvStats: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q266")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q266") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -187,7 +168,7 @@ object Round16 {
         (c, byName.getOrElse(c, None).getOrElse(-1L))
       } :+ (("_rows", stats.rowCount.map(_.toLong).getOrElse(-1L)))
       rows.toDF("col_name", "ndv").orderBy("col_name")
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -211,8 +192,7 @@ object Round16 {
     * metadata events — asserted by the absent commit_versions 2 and
     * 5). The audit groups the feed by (commit, change type). */
   val q267CdfEvolution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q267")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q267") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -250,7 +230,7 @@ object Round16 {
           sum(col("label")).as("sum_label"))
         .orderBy("commit_version", "change_type")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -273,8 +253,7 @@ object Round16 {
     * rows = [0,10) \ {3} ∪ [10,14) ∪ [20,24), with the merge commit
     * present and labeled. */
   val q268MergeBranch: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q268")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q268") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -307,7 +286,7 @@ object Round16 {
              |WHERE op = 'merge-branch'""".stripMargin)
           .head().getLong(0)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -324,8 +303,7 @@ object Round16 {
     * procedure's contract: first call analyzes 2 files, second call is
     * the idempotent no-op (0 files, no commit). */
   val q269Analyze: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q269")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q269") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -356,7 +334,7 @@ object Round16 {
         ("doc_id", byName.getOrElse("doc_id", None).getOrElse(-1L)),
         ("n_words", byName.getOrElse("n_words", None).getOrElse(-1L)))
       rows.toDF("col_name", "ndv").orderBy("col_name")
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -372,8 +350,7 @@ object Round16 {
     * still referenced by the surviving snapshots, so the LIVE rows are
     * untouched — which the audit pins alongside the history window. */
   val q270Retention: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q270")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q270") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -392,7 +369,7 @@ object Round16 {
         .withColumn("min_version", lit(hist.getLong(1)))
         .withColumn("max_version", lit(hist.getLong(2)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -410,8 +387,7 @@ object Round16 {
     * manifest cost with no directory tree. (The file-count proof lives
     * in Round16Spec; this audit pins the joined result.) */
   val q271ValueDpp: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q271")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q271") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -444,7 +420,7 @@ object Round16 {
            |WHERE d.doc_id IN (1, 3)
            |GROUP BY d.title, f.wb ORDER BY f.wb""".stripMargin)
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -463,9 +439,8 @@ object Round16 {
     * file-count trace ending at 3 (1·2·3·4→concat→1·2·3), and a full
     * re-drain from the same checkpoint adding nothing. */
   val q272StreamMaintenance: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q272")
     val cp = Files.createTempDirectory("graft_q272_cp")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "q272") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.src (doc_id BIGINT, title STRING,
            |  fp BIGINT, n_words INT)
@@ -505,10 +480,7 @@ object Round16 {
         .withColumn("n_files", lit(nFiles))
         .withColumn("n_files_after_replay", lit(replayFiles))
       OpsUtil.driverLiteral(out)
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   // ---------------------------------------------------------------------
@@ -530,8 +502,7 @@ object Round16 {
     * lifecycle numbers (seed watermark/groups, refreshed-to version,
     * applied image count, the no-op's zero). */
   val q273MaterializedView: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q273")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q273") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -559,7 +530,7 @@ object Round16 {
         .withColumn("applied", lit(r1.getLong(1)))
         .withColumn("noop_applied", lit(r2.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -577,8 +548,7 @@ object Round16 {
     * its history face — one per source data commit, each folding only
     * that commit's change slice. */
   val q274MvAuto: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q274")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q274") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -599,7 +569,7 @@ object Round16 {
            |FROM $cat.v ORDER BY k""".stripMargin)
         .withColumn("n_auto_refreshes", lit(refreshes))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -622,8 +592,7 @@ object Round16 {
     * whole pipeline: writer envelope → manifest token → DSv2 fold →
     * Catalyst ColumnStat. */
   val q275MinMaxStats: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q275")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q275") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -648,7 +617,7 @@ object Round16 {
         val (lo, hi) = byName.getOrElse(c, (None, None))
         (c, lo.getOrElse(-1L), hi.getOrElse(-1L))
       }.toDF("col_name", "lo", "hi").orderBy("col_name")
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -667,9 +636,8 @@ object Round16 {
     * audit reads the view cold and pins the refresh count off the
     * view's history face: one `mv-refresh` per sink data epoch. */
   val q276StreamMv: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q276")
     val cp = Files.createTempDirectory("graft_q276_cp")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "q276") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.src (doc_id BIGINT, title STRING,
            |  fp BIGINT, n_words INT)
@@ -711,10 +679,7 @@ object Round16 {
         .withColumn("n_refreshes", lit(refreshes))
         .withColumn("n_refreshes_after_replay", lit(refreshesAfterReplay))
       OpsUtil.driverLiteral(out)
-    } finally {
-      teardown(spark, cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   // ---------------------------------------------------------------------
@@ -733,8 +698,7 @@ object Round16 {
     * enabled run scans the view and carries no aggregate, the disabled
     * run aggregates the source. */
   val q277MvRewrite: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q277")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q277") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -776,7 +740,7 @@ object Round16 {
         .withColumn("fallback_scans_view", lit(offScanned))
         .withColumn("fallback_keeps_aggregate", lit(offAggregated))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -796,8 +760,7 @@ object Round16 {
     * compactor must clean up after every job. Two inserts → exactly
     * 2×buckets files, rows intact, and the audit pins both faces. */
   val q278WriteDistribution: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q278")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q278") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -828,7 +791,7 @@ object Round16 {
         .withColumn("files_after_first", lit(filesFirst))
         .withColumn("files_total", lit(filesTotal))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -847,9 +810,8 @@ object Round16 {
     * runs the join with broadcast disabled and pins the three plan
     * facts alongside the joined aggregate. */
   val q279SortedScan: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q279")
     val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "q279") { (cat, wh) =>
       Seq(("a", 48), ("b", 32)).foreach { case (t, n) =>
         spark.sql(
           s"""CREATE TABLE $cat.$t (
@@ -900,10 +862,7 @@ object Round16 {
         .withColumn("shuffles", lit(exchanges))
         .withColumn("sorts", lit(sorts))
       OpsUtil.driverLiteral(out)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      teardown(spark, cat, wh)
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
   }
 
   // ---------------------------------------------------------------------
@@ -924,8 +883,7 @@ object Round16 {
     * nothing (history length, files on disk), the real run's EQUALITY
     * with the preflight, and the live rows surviving untouched. */
   val q280VacuumDryRun: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q280")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q280") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -960,7 +918,7 @@ object Round16 {
         .withColumn("real_deleted", lit(real.getLong(1)))
         .withColumn("disk_files_after_real", lit(diskParts))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -979,8 +937,7 @@ object Round16 {
     * provably touches none of the other 10. The audit pins the scoped
     * counts, the untouched count, and the rows surviving bit-intact. */
   val q281OptimizeWhere: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q281")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q281") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1006,7 +963,7 @@ object Round16 {
         .withColumn("value3_files", lit(entries.count(
           _.stats.get("wb").contains((3L, 3L))).toLong))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1028,8 +985,7 @@ object Round16 {
     * q277's exact match, which drops the Aggregate entirely — the
     * roll-up KEEPS one (re-aggregation over view rows is the point). */
   val q282MvRollup: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q282")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q282") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1088,7 +1044,7 @@ object Round16 {
         .withColumn("global_sum_words", lit(g.getLong(0)))
         .withColumn("global_n_docs", lit(g.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1111,8 +1067,7 @@ object Round16 {
     * spec instantly, let DPP benefits arrive write-by-write, migrate
     * stragglers with OPTIMIZE later. */
   val q283MixedSpecDpp: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q283")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q283") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1174,7 +1129,7 @@ object Round16 {
         .withColumn("scan_emitted_rows", lit(emitted))
         .orderBy("wb")
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1193,8 +1148,7 @@ object Round16 {
     * audit pins plan facts (view-only scan both grains) and rule-off
     * row equality inside the query, then hash-checks the values. */
   val q284MvDerivedAggs: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q284")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q284") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1250,7 +1204,7 @@ object Round16 {
         .withColumn("global_avg_words", lit(g.getDouble(0)))
         .withColumn("global_n_keys", lit(g.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -1270,8 +1224,7 @@ object Round16 {
     * at v1 (pre-delete) as a global roll-up; both plans are asserted
     * view-only, and both match the rule-off time-travel scan. */
   val q285MvTimeTravel: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q285")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q285") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1323,7 +1276,7 @@ object Round16 {
         .withColumn("v1_sum_words", lit(g.getLong(0)))
         .withColumn("v1_n_docs", lit(g.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   val queries: Map[String, Q] = Map(

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,23 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Round17 {
   type Q = (SparkSession, String) => DataFrame
-
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r17_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
 
   /** Insert rows [lo, hi) of the generative corpus as ONE ordered file. */
   private def insertRange(spark: SparkSession, cat: String, lo: Int,
@@ -111,8 +92,7 @@ object Round17 {
     * twin IN the query, and the plan facts ride in the hashed row —
     * a rewrite regression breaks a hash, not a trend. */
   val q286MvFilteredRewrite: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q286")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q286") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -174,7 +154,7 @@ object Round17 {
         .withColumn("topk_scans_source", lit(tkScans(t)))
         .withColumn("topk_take_ordered", lit(tkTakeOrdered))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -197,8 +177,7 @@ object Round17 {
     * extremum view (the negative control). All plan facts and both
     * refresh audits ride in the hashed row. */
   val q287MvMinMax: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q287")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q287") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -271,7 +250,7 @@ object Round17 {
         .withColumn("del_applied", lit(del.getLong(0)))
         .withColumn("del_recomputed", lit(del.getLong(1)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -304,8 +283,7 @@ object Round17 {
     * All plan facts (view-only, no Join node, stale fallback) and
     * both refresh audits ride in the hashed row. */
   val q288MvJoinView: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q288")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q288") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -405,7 +383,7 @@ object Round17 {
         .withColumn("reseed_recomputed", lit(rs.getLong(1)))
         .withColumn("reseed_refreshed", lit(rs.getBoolean(2)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -423,8 +401,7 @@ object Round17 {
     * key>` hit the view exactly. A non-key predicate refuses — the
     * real join plans. */
   val q290MvJoinFiltered: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q290")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q290") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -503,7 +480,7 @@ object Round17 {
         .withColumn("nonkey_scans_view", lit(nkScans(vj)))
         .withColumn("nonkey_scans_fact", lit(nkScans(t)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -527,8 +504,7 @@ object Round17 {
     * data files opened to decide. Plan facts (scans va / not vb /
     * not t) ride in the hashed row; rule-off parity is require-d. */
   val q289MvCostChoice: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q289")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q289") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -571,7 +547,7 @@ object Round17 {
         .withColumn("exact_no_aggregate", lit(!exAgg))
         .withColumn("exact_total_words", lit(exSum))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   val queries: Map[String, Q] = Map(

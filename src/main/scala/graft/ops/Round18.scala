@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,23 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Round18 {
   type Q = (SparkSession, String) => DataFrame
-
-  private def freshCatalog(spark: SparkSession, tag: String)
-      : (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r18_$tag")
-    val cat = tag + "_" +
-      wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
-  private def teardown(spark: SparkSession, cat: String,
-      wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
 
   /** Insert rows [lo, hi) of the generative corpus as ONE ordered file. */
   private def insertRange(spark: SparkSession, cat: String, lo: Int,
@@ -117,8 +98,7 @@ object Round18 {
     * Every rewritten shape is require-checked against its rule-off
     * twin IN the query, and the plan facts ride in the hashed row. */
   val q291MvCompositeKey: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q291")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q291") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -197,7 +177,7 @@ object Round18 {
         .withColumn("finer_scans_view", lit(fgScans(v)))
         .withColumn("finer_scans_source", lit(fgScans(t)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -223,8 +203,7 @@ object Round18 {
     * (both engines render full scale) plus the unscaled integers —
     * exactness checked with zero float formatting slack. */
   val q293MvDecimalSum: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q293")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q293") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -293,7 +272,7 @@ object Round18 {
         .withColumn("avg_scans_source", lit(avScans(t)))
         .withColumn("precision_refused", lit(precisionRefused))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -324,8 +303,7 @@ object Round18 {
     * every rewritten shape is require-checked against its rule-off
     * twin. */
   val q292MvChainJoin: Q = (spark, dir) => {
-    val (cat, wh) = freshCatalog(spark, "q292")
-    try {
+    OpsUtil.withScratchCatalog(spark, "q292") { (cat, wh) =>
       Seq("t", "c", "n").foreach { tbl =>
         spark.sql(
           s"""CREATE TABLE $cat.$tbl (
@@ -427,7 +405,7 @@ object Round18 {
         .withColumn("reseed_recomputed", lit(rs.getLong(1)))
         .withColumn("reseed_refreshed", lit(rs.getBoolean(2)))
       OpsUtil.driverLiteral(out)
-    } finally teardown(spark, cat, wh)
+    }
   }
 
   val queries: Map[String, Q] = Map(

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorExprs.{cosineSql, dotSql, quantize}
 import OpsUtil._
 
 /** Round-3 coverage queries: string→date parsing with an explicit pattern
@@ -141,15 +142,13 @@ object Round3 {
     * follows bucket occupancy (n/256 · 9), never n². */
   val q75AnnLsh: Q = (spark, dir) => {
     import spark.implicits._
-    def quant(e: org.apache.spark.sql.Column) =
-      transform(e, x => floor(x.cast("double") * 1000).cast("long"))
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.VectorExprs.dotLong(a, b)
     val sig = (0 until 8).map { h =>
       when(dot($"e", typedLit(lshPlanes(h))) >= 0, 1L << h).otherwise(0L)
     }.reduce(_ + _)
     val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", quant($"embedding").as("e"))
+      .select($"vec_id", quantize($"embedding").as("e"))
       .withColumn("bucket", sig)
       .cache() // corpus side + query side of the bucket probe
     val probes = emb.filter($"vec_id" === 2)
@@ -391,13 +390,7 @@ object Round3 {
          |FROM orders
          |WHERE o_orderdate = (SELECT max(o_orderdate) FROM orders)
          |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q75_ann_lsh" -> {
-      def dotSql(a: String, b: String) =
-        s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
-      def cosSql(a: String, b: String) =
-        s"""CAST(${dotSql(a, b)} AS DOUBLE)
-           |    / (sqrt(CAST(${dotSql(a, a)} AS DOUBLE))
-           |       * sqrt(CAST(${dotSql(b, b)} AS DOUBLE)))""".stripMargin
+    "q75_ann_lsh" ->
       s"""WITH v AS (
          |  SELECT vec_id,
          |    list_transform(embedding,
@@ -425,11 +418,10 @@ object Round3 {
          |  FROM q
          |)
          |SELECT s.vec_id,
-         |  ${cosSql("s.e", "p.qe")} AS cos_sim
+         |  ${cosineSql("s.e", "p.qe")} AS cos_sim
          |FROM sigs s JOIN probes p ON s.bucket = p.bucket
          |WHERE s.vec_id <> 2
-         |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
-    },
+         |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
     "q76_tfidf" ->
       """WITH terms AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorExprs.{cosineSql, quantize, quantizeSql}
 import OpsUtil._
 
 /** Round-7 additions — the data-SELECTION stages of a training pipeline
@@ -17,21 +18,6 @@ import OpsUtil._
   * unique tiebreaks under every limit.
   */
 object Round7 {
-
-  /** float[] → exact integer vector (thousandths) — the Similarity rule. */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
-
-  private def cosineSql(a: String, b: String): String =
-    s"""CAST(${dotSql(a, b)} AS DOUBLE)
-       |    / (sqrt(CAST(${dotSql(a, a)} AS DOUBLE))
-       |       * sqrt(CAST(${dotSql(b, b)} AS DOUBLE)))""".stripMargin
 
   /** (doc_id, lang, tok) fan-out shared by the text-selection queries —
     * the q100 shape (pre-explode rebalance, codegen'd split, no HOFs). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorExprs.{dotSql, quantize, quantizeSql}
 import OpsUtil._
 
 /** Round-8 additions — the remaining corpus-maintenance stages of a
@@ -24,16 +25,6 @@ import OpsUtil._
   * group-merge) mirror /root/reference/Assignment-python.py:214-420.
   */
 object Round8 {
-
-  /** float[] → exact integer vector (thousandths) — the Similarity rule. */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
 
   /** Exact decimal cents for a double money column — the q122 recipe. */
   private def cents(c: String): Column =

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorExprs.{dotSql, quantize, quantizeSql}
 import OpsUtil._
 
 /** Round-9 additions: the honest ANN-pruning audit the r7 verdict asked
@@ -15,16 +16,6 @@ import OpsUtil._
   */
 object Round9 {
   type Q = (org.apache.spark.sql.SparkSession, String) => DataFrame
-
-  /** float[] → exact integer vector (thousandths) — the Similarity rule. */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
 
   /** 24 deterministic ±1 hyperplanes (the q75 md5 construction, widened
     * from 8 to 24 so the signature can band), reproduced bit-for-bit by

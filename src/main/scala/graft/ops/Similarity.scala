@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorExprs.{cosineSql, quantize, quantizeSql}
 import OpsUtil._
 
 /** Similarity search over the embeddings table (builder prompt: brute-force
@@ -24,13 +25,6 @@ import OpsUtil._
   */
 object Similarity {
 
-  /** float[] → exact integer vector (thousandths). */
-  private def quantize(e: Column): Column =
-    transform(e, x => floor(x.cast("double") * 1000).cast("long"))
-
-  private val quantizeSql =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
   /** Exact integer dot product of two quantized vectors — a custom codegen
     * Expression ([[graft.functions.VectorExprs.dotLong]]); semantically
     * identical to aggregate(zip_with(a,b,_*_), 0L, _+_) but a tight
@@ -38,20 +32,12 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorExprs.dotLong(a, b)
 
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform($a, (x, i) -> x * $b[i]), (p, q) -> p + q)"
-
   /** Fused single-pass cosine ([[graft.functions.CosineSimLong]]): one
     * generated loop for dot + both norms; bit-identical to the composed
     * three-dot form (same final IEEE division), 3x less array traversal
     * in the pair loops. */
   private def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosineLong(a, b)
-
-  private def cosineSql(a: String, b: String): String =
-    s"""CAST(${dotSql(a, b)} AS DOUBLE)
-       |    / (sqrt(CAST(${dotSql(a, a)} AS DOUBLE))
-       |       * sqrt(CAST(${dotSql(b, b)} AS DOUBLE)))""".stripMargin
 
   /** Brute-force cosine top-k against one query vector (vec_id 0):
     * broadcast the query, scan the corpus once, TakeOrderedAndProject. */
@@ -71,14 +57,14 @@ object Similarity {
   /** Embedding-cosine near-duplicate pairs, blocked by label: the pairwise
     * join only forms within a label cell, never across the corpus. The
     * squared norm is computed ONCE per vector before the join (n² pairs
-    * would otherwise re-fold both norms per pair — 3× the array work); the
-    * cached pre-norm relation is scanned by both join sides. */
+    * would otherwise re-fold both norms per pair — 3× the array work).
+    * Both join sides are that one pre-norm subtree; it is not cached, so
+    * the lazily returned frame leaves no persisted blocks behind. */
   val q44EmbeddingNeardup: Q = (spark, dir) => {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
       .select($"vec_id", $"label", quantize($"embedding").as("e"))
       .withColumn("n2", dot($"e", $"e"))
-      .cache()
     emb.as("va").join(emb.as("vb"),
         col("va.label") === col("vb.label")
           && col("va.vec_id") < col("vb.vec_id"))

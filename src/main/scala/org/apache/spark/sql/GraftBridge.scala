@@ -46,6 +46,33 @@ object GraftBridge {
       cs.experimental.extraOptimizations = cs.experimental.extraOptimizations :+ r
   }
 
+  /** The session CatalogManager and its private map of instantiated
+    * catalogs, which the manager mutates under its own monitor. Spark has
+    * no public per-name removal (`reset()` drops every catalog). */
+  private def catalogMap(spark: SparkSession)
+      : (AnyRef, scala.collection.mutable.HashMap[String, _]) = {
+    val manager = spark.asInstanceOf[classic.SparkSession].sessionState
+      .catalogManager
+    val field = manager.getClass.getDeclaredField("catalogs")
+    field.setAccessible(true)
+    (manager, field.get(manager)
+      .asInstanceOf[scala.collection.mutable.HashMap[String, _]])
+  }
+
+  /** Names of the catalogs the session has instantiated so far. */
+  def instantiatedCatalogs(spark: SparkSession): Set[String] = {
+    val (manager, catalogs) = catalogMap(spark)
+    manager.synchronized(catalogs.keySet.toSet)
+  }
+
+  /** Evict catalog `name` from the session, so a later reference loads
+    * it afresh from the conf (or fails once its conf is unset). Unsetting
+    * `spark.sql.catalog.<name>` alone leaves the instance in place. */
+  def dropCatalog(spark: SparkSession, name: String): Unit = {
+    val (manager, catalogs) = catalogMap(spark)
+    manager.synchronized(catalogs.remove(name))
+  }
+
   /** Register a custom Expression as a SQL function on a live session
     * (the config-time path is SparkSessionExtensions.injectFunction). */
   def registerFunction(spark: SparkSession, name: String,

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.ops.OpsUtil
 import graft.sources.{GraftTableMeta, GraftVersions}
 
 /** Round-13 wave 8: bucketed WAREHOUSE tables — `PARTITIONED BY
@@ -14,26 +15,13 @@ import graft.sources.{GraftTableMeta, GraftVersions}
   */
 class BucketedWarehouseSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_bkt_$tag")
-    val cat = s"bkt_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
 
   test("bucketed CREATE persists the layout; every file carries its bucket " +
       "and holds only its residue class") {
-    val (cat, wh) = freshCatalog("lay")
-    try {
+    OpsUtil.withScratchCatalog(spark, "bkt_lay") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(4, doc_id))
@@ -60,17 +48,16 @@ class BucketedWarehouseSpec extends SparkSpec {
         spark.sql(s"CREATE TABLE $cat.bad (doc_id BIGINT, title STRING, " +
           "fp BIGINT, n_words INT) PARTITIONED BY (n_words)")
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("two bucketed warehouse tables storage-partition-join with no " +
       "exchange; MOR deletes and compaction keep the layout") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val (cat, wh) = freshCatalog("spj")
     val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
     val prev = keys.map(k => k -> spark.conf.getOption(k))
-    try {
+    try OpsUtil.withScratchCatalog(spark, "bkt_spj") { (cat, wh) =>
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -127,14 +114,12 @@ class BucketedWarehouseSpec extends SparkSpec {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None)    => spark.conf.unset(k)
       }
-      dropCatalog(cat, wh)
     }
   }
 
   test("the files metadata table exposes the live manifest: buckets, " +
       "counters, masks, stats envelope — and only for versioned parents") {
-    val (cat, wh) = freshCatalog("fmeta")
-    try {
+    OpsUtil.withScratchCatalog(spark, "bkt_fmeta") { (cat, wh) =>
       // 2 input partitions × 4 buckets → 8 files of 5 rows each: no
       // mask below can fully cover a file (a 1-row bucket file whose
       // row is deleted would drop from the manifest and shrink the
@@ -168,14 +153,13 @@ class BucketedWarehouseSpec extends SparkSpec {
       intercept[Exception] {
         spark.sql(s"SELECT * FROM $cat.plain.files").collect()
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("streaming epochs into a bucketed table keep the layout: every " +
       "sink-committed file carries its bucket and residue class") {
-    val (cat, wh) = freshCatalog("stream")
     val cp = Files.createTempDirectory("graft_bkt_stream_cp")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "bkt_stream") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.sink (doc_id BIGINT, title STRING, fp BIGINT,
            |  n_words INT) PARTITIONED BY (bucket(4, doc_id))
@@ -199,16 +183,12 @@ class BucketedWarehouseSpec extends SparkSpec {
       }
       assert(spark.sql(s"SELECT COUNT(*) FROM $cat.sink")
         .head().getLong(0) == 24)
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   test("a scan without the bucket column, and a table with pre-layout " +
       "files, degrade to unknown partitioning — never a wrong grouping") {
-    val (cat, wh) = freshCatalog("deg")
-    try {
+    OpsUtil.withScratchCatalog(spark, "bkt_deg") { (cat, wh) =>
       docsRange(40)
         .writeTo(s"$cat.t")
         .partitionedBy(org.apache.spark.sql.functions.bucket(4,
@@ -227,6 +207,6 @@ class BucketedWarehouseSpec extends SparkSpec {
           GraftVersions.FileEntry.NoStats)))
       val n = spark.sql(s"SELECT COUNT(*) FROM $cat.t").head().getLong(0)
       assert(n == 41)
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

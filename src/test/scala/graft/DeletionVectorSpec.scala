@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.ops.OpsUtil
 import graft.sources.{GraftDV, GraftTableMeta, GraftVersions}
 
 /** Round-13 wave 6: the three-tier DELETE story (metadata-only,
@@ -11,18 +12,6 @@ import graft.sources.{GraftDV, GraftTableMeta, GraftVersions}
   */
 class DeletionVectorSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_dv_$tag")
-    val cat = s"dv_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
@@ -46,8 +35,7 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("MOR delete masks rows without touching data bytes; masks compose; " +
       "a fully-deleted file leaves the live set") {
-    val (cat, wh) = freshCatalog("mor")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_mor") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -103,12 +91,11 @@ class DeletionVectorSpec extends SparkSpec {
       assert(vc.entries.forall(_.dv.isEmpty))
       assert(spark.sql(s"SELECT COUNT(*) FROM $cat.t").head().getLong(0) ==
         (10L until 40L).count(i => i % 7 != 3 && i % 7 != 5))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("two CONCURRENT MOR deletes union their masks (neither is lost)") {
-    val (cat, wh) = freshCatalog("race")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_race") { (cat, wh) =>
       docsRange(60)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -125,13 +112,12 @@ class DeletionVectorSpec extends SparkSpec {
         "both deletes' masks must survive the race")
       val log = GraftVersions.listVersions(wh.resolve("t"))
       assert(log.count(_.op == "delete") == 2, "two serialized delete commits")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("metadata delete: provable predicates drop files with NO scan job; " +
       "partial predicates fall back to the row-level path") {
-    val (cat, wh) = freshCatalog("meta")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_meta") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -183,13 +169,12 @@ class DeletionVectorSpec extends SparkSpec {
       }
       assert(remaining == GraftVersions.latest(dir).get.files.toSet,
         "vacuum keeps exactly the live files")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("manifest statistics: CBO auto-broadcasts the small versioned side; " +
       "reported rowCount tracks deletion vectors") {
-    val (cat, wh) = freshCatalog("stats")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_stats") { (cat, wh) =>
       docsRange(500)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -215,13 +200,12 @@ class DeletionVectorSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"),
         s"stats must drive an auto-broadcast:\n${plan.take(800)}")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("ALTER TABLE properties: CHECK validation on existing rows, UNSET, " +
       "delete.mode flip changes the delete path, bloom config post-create") {
-    val (cat, wh) = freshCatalog("alter")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_alter") { (cat, wh) =>
       docsRange(30).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       val dir = wh.resolve("t")
@@ -273,13 +257,12 @@ class DeletionVectorSpec extends SparkSpec {
       val last = GraftVersions.latest(dir).get
       assert(last.entries.exists(_.bloom.isDefined),
         "the post-ALTER insert's file must carry a bloom")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MOR update: old rows masked in place, new rows in fresh files, " +
       "original bytes untouched; masks compose across generations") {
-    val (cat, wh) = freshCatalog("upd")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_upd") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -318,13 +301,12 @@ class DeletionVectorSpec extends SparkSpec {
       assert(spark.sql(
         s"SELECT n_words FROM $cat.t VERSION AS OF 2 WHERE doc_id = 3")
         .head().getInt(0) == 0)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MOR update atomicity: a CHECK-violating update lands NEITHER its " +
       "masks nor its rows") {
-    val (cat, wh) = freshCatalog("updatom")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_updatom") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
         .tableProperty("update.mode", "merge-on-read")
@@ -343,13 +325,12 @@ class DeletionVectorSpec extends SparkSpec {
       spark.sql(s"UPDATE $cat.t SET n_words = 99 WHERE doc_id = 2")
       assert(spark.sql(s"SELECT n_words FROM $cat.t WHERE doc_id = 2")
         .head().getInt(0) == 99)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MOR MERGE: update/delete/insert actions in one statement — masks, " +
       "a dropped fully-matched file, fresh insert files, one commit") {
-    val (cat, wh) = freshCatalog("merge")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_merge") { (cat, wh) =>
       docsRange(30)
         .repartitionByRange(3, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -384,13 +365,12 @@ class DeletionVectorSpec extends SparkSpec {
         (15L until 30L).filter(_ % 2 == 0).map(i => (i, 0)) ++
         (30L until 40L).map(i => (i, (i % 91 + 9).toInt))
       assert(rows == expected.sortBy(_._1))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("manifest aggregate pushdown: unfiltered COUNT/MIN/MAX answer from " +
       "the manifest (DV-exact for COUNT, DV-declined for MIN/MAX)") {
-    val (cat, wh) = freshCatalog("agg")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_agg") { (cat, wh) =>
       docsRange(40)
         .repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -424,15 +404,14 @@ class DeletionVectorSpec extends SparkSpec {
       assert(one(s"SELECT COUNT(*) FROM $cat.t VERSION AS OF 1") == 40)
       assert(planOf(s"SELECT COUNT(*) FROM $cat.t VERSION AS OF 1")
         .contains("manifest-agg"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("change feed startingVersion: a fresh stream tails from the named " +
       "commit instead of the initial snapshot; vacuumed starts reject") {
-    val (cat, wh) = freshCatalog("sv")
     val sink = Files.createTempDirectory("graft_sv_sink")
     val cp = Files.createTempDirectory("graft_sv_cp")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "dv_sv") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create() // v0 enable, v1 CTAS
       def insertRange(lo: Int, hi: Int): Unit = {
@@ -476,15 +455,13 @@ class DeletionVectorSpec extends SparkSpec {
           e.getMessage.contains("startingVersion"), e.getMessage)
       } finally org.apache.commons.io.FileUtils.deleteDirectory(cp2.toFile)
     } finally {
-      dropCatalog(cat, wh)
       org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
       org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
     }
   }
 
   test("SHOW TBLPROPERTIES exposes the persisted store and versioning state") {
-    val (cat, wh) = freshCatalog("props")
-    try {
+    OpsUtil.withScratchCatalog(spark, "dv_props") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read")
@@ -499,17 +476,16 @@ class DeletionVectorSpec extends SparkSpec {
       val after = spark.sql(s"SHOW TBLPROPERTIES $cat.t").collect()
         .map(_.getString(0)).toSet
       assert(!after.contains("check.pos"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("change feed: a deletion-vector commit fails the stream unless " +
       "ignoreDeletes, which skips it and keeps tailing") {
-    val (cat, wh) = freshCatalog("feed")
     val sink1 = Files.createTempDirectory("graft_dv_feed_sink1")
     val sink2 = Files.createTempDirectory("graft_dv_feed_sink2")
     val cp1 = Files.createTempDirectory("graft_dv_feed_cp1")
     val cp2 = Files.createTempDirectory("graft_dv_feed_cp2")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "dv_feed") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true")
         .tableProperty("delete.mode", "merge-on-read").create()
@@ -548,7 +524,6 @@ class DeletionVectorSpec extends SparkSpec {
       assert(ids == ((0L until 20L) :+ 500L),
         s"feed must emit v1's files once and the late append: $ids")
     } finally {
-      dropCatalog(cat, wh)
       org.apache.commons.io.FileUtils.deleteDirectory(sink1.toFile)
       org.apache.commons.io.FileUtils.deleteDirectory(sink2.toFile)
       org.apache.commons.io.FileUtils.deleteDirectory(cp1.toFile)

@@ -19,15 +19,13 @@ import graft.functions.{TopKByValue, VectorExprs}
 class KnnBlockSpec extends SparkSpec {
   import spark.implicits._
 
-  private def quantize(c: org.apache.spark.sql.Column) =
-    transform(c, x => floor(x.cast("double") * 1000).cast("long"))
-
   /** The former exact q127 path: blocked pair join, TopKByValue(3), the
     * mutual self-join of the edge list, and the profile joins. */
   private def pairJoinProfile(embIn: DataFrame): Seq[String] = {
     val dot = VectorExprs.dotLong _
     val top3 = udaf(new TopKByValue(3))
-    val emb = embIn.select($"vec_id", $"label", quantize($"embedding").as("e"))
+    val emb = embIn
+      .select($"vec_id", $"label", VectorExprs.quantize($"embedding").as("e"))
       .withColumn("n2", dot($"e", $"e"))
     val edges = emb.as("a").join(emb.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
@@ -145,7 +143,7 @@ class KnnBlockSpec extends SparkSpec {
       (-2L, Some(Seq(0.5f, -2.0f, 1.0f)))).toDF("vec_id", "embedding")
     val both = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
       .unionByName(extra)
-      .select($"vec_id", quantize($"embedding").as("e"))
+      .select($"vec_id", VectorExprs.quantize($"embedding").as("e"))
       .select($"vec_id", composed.as("want"),
         VectorExprs.signBits($"e", planes).as("got"))
       .collect()

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
 
+import graft.ops.OpsUtil
 import graft.sources.{GraftDV, GraftVersions}
 
 /** Round-15 advisor fixes, each with the failure it closes:
@@ -27,18 +28,6 @@ import graft.sources.{GraftDV, GraftVersions}
   */
 class Round15Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r15_$tag")
-    val cat = s"r15_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
@@ -78,8 +67,7 @@ class Round15Spec extends SparkSpec {
 
   test("change feed: a retention hole mid-range fails loudly instead of " +
       "skipping the expired commit and re-snapshotting") {
-    val (cat, wh) = freshCatalog("cdfhole")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_cdfhole") { (cat, wh) =>
       docsRange(4).coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create() // v0+v1
       spark.sql(s"INSERT INTO $cat.t VALUES (10, 'a', 1, 2)") // v2
@@ -117,13 +105,12 @@ class Round15Spec extends SparkSpec {
       assert(msgs2.exists(m => m.contains("no longer retained") ||
         m.contains("predates the retained history")),
         msgs2.mkString(" | "))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("change feed: contiguous retained history is unaffected by the " +
       "hole guard (fresh stream still snapshots at the oldest retained)") {
-    val (cat, wh) = freshCatalog("cdfok")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_cdfok") { (cat, wh) =>
       docsRange(4).coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create() // v0+v1
       spark.sql(s"INSERT INTO $cat.t VALUES (10, 'a', 1, 2)") // v2
@@ -156,13 +143,12 @@ class Round15Spec extends SparkSpec {
         org.apache.commons.io.FileUtils.deleteDirectory(sink.toFile)
         org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("concat compaction: eq-free files honor targetFiles even when " +
       "eq-masked neighbors bin apart") {
-    val (cat, wh) = freshCatalog("concatbins")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_concatbins") { (cat, wh) =>
       docsRange(40).repartitionByRange(5,
           org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -180,13 +166,12 @@ class Round15Spec extends SparkSpec {
       // row ids survived the splice
       assert(spark.sql(s"SELECT _row_id FROM $cat.t").collect()
         .forall(!_.isNullAt(0)))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("ALTER COLUMN: the row-lineage metadata names are reserved for " +
       "ADD and RENAME") {
-    val (cat, wh) = freshCatalog("reserved")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_reserved") { (cat, wh) =>
       docsRange(5).coalesce(1)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("row.tracking", "true").create()
@@ -204,7 +189,7 @@ class Round15Spec extends SparkSpec {
       // the metadata column still reads (nothing shadowed it)
       assert(spark.sql(s"SELECT _row_id FROM $cat.t").collect()
         .forall(!_.isNullAt(0)))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int = {
@@ -222,8 +207,7 @@ class Round15Spec extends SparkSpec {
 
   test("generated columns: explicit mismatching value fails the write; " +
       "the value layout fans files with min=max stats and prunes") {
-    val (cat, wh) = freshCatalog("gencol")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_gencol") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -269,13 +253,12 @@ class Round15Spec extends SparkSpec {
         .count() ==
         spark.table(s"$cat.t").collect()
           .count(_.getAs[Long]("wc_bucket") == 2L))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("generated columns: a COW UPDATE of a base input migrates rows " +
       "to their recomputed value partition") {
-    val (cat, wh) = freshCatalog("genupd")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_genupd") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -296,13 +279,12 @@ class Round15Spec extends SparkSpec {
       val entries = GraftVersions.latest(wh.resolve("t")).get.entries
       assert(entries.forall(en => en.stats.get("wc_bucket")
         .exists { case (lo, hi) => lo == hi }))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("identity columns: ALWAYS rejects explicit inserts; BY DEFAULT " +
       "accepts them and the hwm continues past the explicit max") {
-    val (cat, wh) = freshCatalog("idcol")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_idcol") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.a (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -336,12 +318,11 @@ class Round15Spec extends SparkSpec {
       spark.sql(s"UPDATE $cat.b SET n_words = 9 WHERE doc_id = 1")
       assert(spark.table(s"$cat.b").filter(col("doc_id") === 1)
         .head().getAs[Long]("rid") == 1000000L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("identity columns: two concurrent writers draw disjoint ranges") {
-    val (cat, wh) = freshCatalog("idrace")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_idrace") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -370,13 +351,12 @@ class Round15Spec extends SparkSpec {
       assert(rids.length == 200)
       assert(rids.distinct.length == 200,
         s"identity collision across concurrent writers")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("DESCRIBE face: generated/identity columns and the value layout " +
       "surface their declared metadata back out") {
-    val (cat, wh) = freshCatalog("descface")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_descface") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -402,13 +382,12 @@ class Round15Spec extends SparkSpec {
       // partitioning reports the value layout as an identity transform
       val parts = tbl.partitioning().map(_.toString)
       assert(parts.exists(_.contains("wb")), parts.mkString(", "))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("the value-partitioning column cannot be renamed or dropped " +
       "(the layout references it by name)") {
-    val (cat, wh) = freshCatalog("genguard")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_genguard") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -431,13 +410,12 @@ class Round15Spec extends SparkSpec {
         |SELECT doc_id, title, fp, n_words FROM ${cat}_src""".stripMargin)
       spark.catalog.dropTempView(s"${cat}_src")
       assert(spark.table(s"$cat.t").count() == 4L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("MERGE: NOT MATCHED inserts mint fresh identity values; matched " +
       "updates preserve them") {
-    val (cat, wh) = freshCatalog("idmerge")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_idmerge") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -468,13 +446,12 @@ class Round15Spec extends SparkSpec {
       assert(after.values.toSeq.distinct.size == 8, after.toString)
       val fresh = Seq(5L, 6L, 7L).map(after)
       assert(fresh.forall(id => !before.values.toSet.contains(id)))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("OPTIMIZE on a value-layout table keeps every output file " +
       "single-valued (the fan applies to the compaction rewrite too)") {
-    val (cat, wh) = freshCatalog("genopt")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_genopt") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -500,14 +477,13 @@ class Round15Spec extends SparkSpec {
       assert(after.forall(_.stats.get("wb")
         .exists { case (lo, hi) => lo == hi }), after.toString)
       assert(spark.table(s"$cat.t").count() == 12L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("streaming writes compute generated cells and mint identity " +
       "values (the fourth writer path, same one shared implementation)") {
-    val (cat, wh) = freshCatalog("sgen")
     val cp = Files.createTempDirectory("graft_r15_sgen_cp")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "r15_sgen") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.dst (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -543,16 +519,12 @@ class Round15Spec extends SparkSpec {
       assert(r2.length == 7)
       assert(r2.map(_.getLong(1)).distinct.length == 7,
         "identity values must stay unique across micro-batches")
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   test("equality deletes auto-materialize once pending values cross the " +
       "table's threshold; below it masks stay metadata-only") {
-    val (cat, wh) = freshCatalog("eqmat")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r15_eqmat") { (cat, wh) =>
       docsRange(30).repartitionByRange(3,
           org.apache.spark.sql.functions.col("doc_id"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
@@ -586,7 +558,7 @@ class Round15Spec extends SparkSpec {
       val ids = spark.table(s"$cat.t").select("doc_id").collect()
         .map(_.getLong(0)).toSet
       assert(!ids.exists(Set(1L, 2L, 11L, 12L, 13L)))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("cross-driver commit claim: two uncoordinated writers race the " +

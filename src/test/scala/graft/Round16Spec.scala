@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
 
+import graft.ops.OpsUtil
 import graft.sources.{GraftTableMeta, GraftVersions}
 
 /** Round-16: the self-maintaining-table quartet (auto-compaction, NDV
@@ -26,19 +27,6 @@ import graft.sources.{GraftTableMeta, GraftVersions}
   */
 class Round16Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r16_$tag")
-    val cat = s"r16_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
-
   private def insertRange(cat: String, table: String, lo: Int,
       hi: Int): Unit = {
     spark.read.format("graft.sources.GraftDocsSource")
@@ -58,8 +46,7 @@ class Round16Spec extends SparkSpec {
 
   test("identity columns must be BIGINT: INT rejects at CREATE with a " +
       "clear message (block allocation overflows INT after one write)") {
-    val (cat, wh) = freshCatalog("intid")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_intid") { (cat, wh) =>
       val e = intercept[Exception] {
         spark.sql(
           s"""CREATE TABLE $cat.t (
@@ -78,7 +65,7 @@ class Round16Spec extends SparkSpec {
            |TBLPROPERTIES ('versioned' = 'true')""".stripMargin)
       insertRange(cat, "t", 0, 3)
       assert(spark.table(s"$cat.t").count() == 3)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -162,8 +149,7 @@ class Round16Spec extends SparkSpec {
 
   test("vacuum folds old identity claims but always keeps each " +
       "column's frontier claim") {
-    val (cat, wh) = freshCatalog("idfold")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_idfold") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -202,7 +188,7 @@ class Round16Spec extends SparkSpec {
       assert(rids.max >= end, "post-fold allocation continues past the " +
         "kept frontier")
       assert(beforeMaxEnd > 0) // silence unused warning
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -211,8 +197,7 @@ class Round16Spec extends SparkSpec {
 
   test("eq-mask materialization and OPTIMIZE on a GENERATED ALWAYS AS " +
       "IDENTITY table preserve ids instead of tripping the guard") {
-    val (cat, wh) = freshCatalog("idrew")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_idrew") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -241,7 +226,7 @@ class Round16Spec extends SparkSpec {
       val optimized = spark.sql(s"SELECT doc_id, rid FROM $cat.t")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(optimized == after, "OPTIMIZE must preserve identity cells")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -290,8 +275,7 @@ class Round16Spec extends SparkSpec {
 
   test("auto-compaction respects the commit lock: concurrent appends " +
       "with the policy firing lose no rows and keep the log sane") {
-    val (cat, wh) = freshCatalog("acrace")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_acrace") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -324,13 +308,12 @@ class Round16Spec extends SparkSpec {
         s"threshold must bound the live set: ${head.entries.size}")
       assert(GraftVersions.listVersions(wh.resolve("t"))
         .exists(_.op == "compact"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("auto-compaction preserves a bucketed table's layout (bins " +
       "never cross bucket classes) and a value layout's partition stats") {
-    val (cat, wh) = freshCatalog("aclay")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_aclay") { (cat, wh) =>
       // bucketed face
       spark.sql(
         s"""CREATE TABLE $cat.b (
@@ -373,7 +356,7 @@ class Round16Spec extends SparkSpec {
         assert(lo == hi, s"partition value widened by compaction: $e")
       }
       assert(spark.table(s"$cat.v").count() == 12)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -405,11 +388,10 @@ class Round16Spec extends SparkSpec {
 
   test("NDV column statistics flip the CBO's build side: a grouped " +
       "subquery broadcasts when NDV proves it small") {
-    val (cat, wh) = freshCatalog("ndvcbo")
     val oldCbo = spark.conf.get("spark.sql.cbo.enabled", "false")
     val oldThresh =
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "r16_ndvcbo") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -448,14 +430,12 @@ class Round16Spec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.cbo.enabled", oldCbo)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      dropCatalog(cat, wh)
     }
   }
 
   test("NDV sketches fold through OPTIMIZE (union across members) and " +
       "degrade to absent when any member lacks one") {
-    val (cat, wh) = freshCatalog("ndvopt")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_ndvopt") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -471,7 +451,7 @@ class Round16Spec extends SparkSpec {
       assert(ndv.isDefined, "concat must union member sketches")
       assert(ndv.get.cols("doc_id").estimate == 80L,
         s"union of [0,50) and [30,80): ${ndv.get.cols("doc_id").estimate}")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -480,8 +460,7 @@ class Round16Spec extends SparkSpec {
 
   test("merge_branch rejects overlapping-scope divergence, a compacted " +
       "main, and row-tracked tables — loudly, with intact state") {
-    val (cat, wh) = freshCatalog("mbrej")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mbrej") { (cat, wh) =>
       // overlapping scope: both sides delete from the same fork file
       spark.sql(
         s"""CREATE TABLE $cat.t (
@@ -527,7 +506,7 @@ class Round16Spec extends SparkSpec {
       }
       assert(e3.getMessage.contains("row-tracked") ||
         e3.getMessage.contains("alias row"), e3.getMessage)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -566,8 +545,7 @@ class Round16Spec extends SparkSpec {
 
   test("static _file IN (...) predicates prune at plan time — the " +
       "scoped maintenance pass never opens the rest of the table") {
-    val (cat, wh) = freshCatalog("fstatic")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_fstatic") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -583,7 +561,7 @@ class Round16Spec extends SparkSpec {
         .filter(col("_file").isin(names.head))
       assert(scanPartitions(one) == 1, "whitelist must prune to 1 file")
       assert(one.count() == 4)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -592,8 +570,7 @@ class Round16Spec extends SparkSpec {
 
   test("retention.versions expires old snapshots on commit, but a tag " +
       "pins its version through the policy") {
-    val (cat, wh) = freshCatalog("reten")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_reten") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -616,7 +593,7 @@ class Round16Spec extends SparkSpec {
       assert(spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 1")
         .count() == 2)
       assert(spark.table(s"$cat.t").count() == 8)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -651,8 +628,7 @@ class Round16Spec extends SparkSpec {
 
   test("dynamic partition pruning on the value layout: a broadcast dim " +
       "join plans only the matching partitions' files") {
-    val (cat, wh) = freshCatalog("vdpp")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_vdpp") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -708,14 +684,13 @@ class Round16Spec extends SparkSpec {
       val emitted = fact.metrics("numOutputRows").value
       assert(emitted == expect.values.sum,
         s"DPP must read only wb in {1,3}'s files: emitted $emitted of 96")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("streaming sinks run the self-maintenance policies per epoch, " +
       "and retention never expires an appId's last txn record") {
-    val (cat, wh) = freshCatalog("strmnt")
     val cp = Files.createTempDirectory("graft_r16_strmnt_cp")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "r16_strmnt") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.src (doc_id BIGINT, title STRING,
            |  fp BIGINT, n_words INT)
@@ -753,15 +728,11 @@ class Round16Spec extends SparkSpec {
       drain()
       assert(spark.table(s"$cat.sink").count() == 28)
       assert(GraftVersions.latest(dir).get.entries.size <= 3)
-    } finally {
-      dropCatalog(cat, wh)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   test("merge_branch on an unmoved main degrades to fast_forward") {
-    val (cat, wh) = freshCatalog("mbff")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mbff") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -775,7 +746,7 @@ class Round16Spec extends SparkSpec {
       val ops = GraftVersions.listVersions(wh.resolve("t")).map(_.op)
       assert(ops.contains("fast-forward"), ops.mkString(", "))
       assert(GraftVersions.listBranches(wh.resolve("t")).isEmpty)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -784,11 +755,10 @@ class Round16Spec extends SparkSpec {
 
   test("min/max column statistics shrink a range filter's estimate: " +
       "the filtered side proves itself broadcast-small under CBO") {
-    val (cat, wh) = freshCatalog("mmcbo")
     val oldCbo = spark.conf.get("spark.sql.cbo.enabled", "false")
     val oldThresh =
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "r16_mmcbo") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -828,14 +798,12 @@ class Round16Spec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.cbo.enabled", oldCbo)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      dropCatalog(cat, wh)
     }
   }
 
   test("min/max bounds are all-or-nothing per column: a pre-stats live " +
       "file withholds the bound instead of narrowing it wrongly") {
-    val (cat, wh) = freshCatalog("mmpre")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mmpre") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 40)
       val root = wh.resolve("t")
@@ -855,7 +823,7 @@ class Round16Spec extends SparkSpec {
         .map { case (a, cs) => a.name -> cs.min }.toMap
       assert(!mins.get("doc_id").exists(_.isDefined),
         s"stripped stats must withhold the bound: $mins")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -864,8 +832,7 @@ class Round16Spec extends SparkSpec {
 
   test("write.distribution=hash bounds a multi-partition insert to one " +
       "file per bucket; without it the same insert fans per task") {
-    val (cat, wh) = freshCatalog("wdist")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_wdist") { (cat, wh) =>
       Seq(("demand", ", 'write.distribution' = 'hash'"), ("fan", ""))
         .foreach { case (t, prop) =>
           spark.sql(
@@ -917,7 +884,7 @@ class Round16Spec extends SparkSpec {
           s"${e.name}: [$lo,$hi]")
         assert(e.bucket.isDefined, s"${e.name} must carry its bucket id")
       }
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -926,8 +893,7 @@ class Round16Spec extends SparkSpec {
 
   test("sorted-scan ordering is manifest-PROVEN: withheld for unsorted " +
       "writes, multi-file bucket classes, and post-concat files") {
-    val (cat, wh) = freshCatalog("sorder")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_sorder") { (cat, wh) =>
       def ordering(t: String): Int = {
         val df = spark.read.format("graft.sources.GraftDocsSource")
           .option("path", wh.resolve(t).toString).load()
@@ -1021,7 +987,7 @@ class Round16Spec extends SparkSpec {
       // per-file flags in the manifest match the observation
       val plain = GraftVersions.latest(wh.resolve("plain")).get.entries
       assert(plain.forall(!_.sorted))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -1030,8 +996,7 @@ class Round16Spec extends SparkSpec {
 
   test("optimize_where rewrites exactly the scoped partition's files — " +
       "untouched files keep their names; row-tracked tables reject") {
-    val (cat, wh) = freshCatalog("scopt")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_scopt") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1083,7 +1048,7 @@ class Round16Spec extends SparkSpec {
         Option(t).toSeq.flatMap(x =>
           Option(x.getMessage).toSeq ++ msgs(x.getCause))
       assert(msgs(e).exists(_.contains("row-tracked")), msgs(e).mkString("|"))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -1113,8 +1078,7 @@ class Round16Spec extends SparkSpec {
 
   test("mv: refresh equals a full recompute and is exactly-once — " +
       "a second refresh finds its watermark ledgered and lands nothing") {
-    val (cat, wh) = freshCatalog("mv1")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mv1") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 12)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -1136,13 +1100,12 @@ class Round16Spec extends SparkSpec {
         None, Nil, graft.sources.GraftMv.AppId,
         GraftVersions.lastTxnEpoch(wh.resolve("v"),
           graft.sources.GraftMv.AppId).get).isEmpty)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: a group whose live count reaches zero is deleted from the " +
       "view, never tombstoned") {
-    val (cat, wh) = freshCatalog("mv2")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mv2") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 10)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -1153,13 +1116,12 @@ class Round16Spec extends SparkSpec {
       val keys = mvRows(cat, "v").map(_._1)
       assert(keys == Set(0L, 1L, 3L, 4L), keys.toString)
       assert(mvRows(cat, "v") == fullRecompute(cat))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: create rejects aggregates in the expression slots, " +
       "nondeterminism, and unresolvable columns — each loudly") {
-    val (cat, wh) = freshCatalog("mv3")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mv3") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 4)
       val agg = intercept[Exception] {
@@ -1179,13 +1141,12 @@ class Round16Spec extends SparkSpec {
       }
       assert(unres.getMessage.contains("resolve against the base"),
         unres.getMessage)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: auto=true keeps the view fresh on every source data " +
       "commit — the committing writer pays the inline refresh") {
-    val (cat, wh) = freshCatalog("mv4")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mv4") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 8)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -1196,13 +1157,12 @@ class Round16Spec extends SparkSpec {
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id < 3") // MOR delete too
       assert(mvRows(cat, "v") == fullRecompute(cat),
         "delete must have refreshed the view inline")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: the watermark survives MV vacuum (txn pinning); a source " +
       "vacuumed past the watermark fails the refresh loudly") {
-    val (cat, wh) = freshCatalog("mv5")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mv5") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 8)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -1222,7 +1182,7 @@ class Round16Spec extends SparkSpec {
         spark.sql(s"CALL $cat.system.refresh_mv('v')")
       }
       assert(gone.getMessage != null, "expired feed must fail loudly")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   private def mvRewriteFacts(df: org.apache.spark.sql.DataFrame,
@@ -1241,8 +1201,7 @@ class Round16Spec extends SparkSpec {
 
   test("mv rewrite: answers the declared aggregate from the view only " +
       "while FRESH; a stale ledger or a refresh restores/blocks it") {
-    val (cat, wh) = freshCatalog("mvrw1")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mvrw1") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 12)
       // manual (auto=false) view: later source commits leave it stale
@@ -1272,13 +1231,12 @@ class Round16Spec extends SparkSpec {
       val real = run()
       assert(fresh.exceptAll(real).isEmpty && real.exceptAll(fresh).isEmpty)
       spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv rewrite: a pushed-down filter, a different aggregate, or a " +
       "time-travel read each disqualify the substitution") {
-    val (cat, wh) = freshCatalog("mvrw2")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mvrw2") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 12)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -1331,13 +1289,12 @@ class Round16Spec extends SparkSpec {
       assert(!mvRewriteFacts(preSeed, mvPath)._1,
         "a pin with no ledgered watermark must fall back to the scan")
       assert(preSeed.count() == 0L) // v0 is the empty enable snapshot
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: a cyclic mv.dependents chain is contained by the refresh " +
       "guard — bounded, surfaced, and never failing the source commit") {
-    val (cat, wh) = freshCatalog("mv6")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mv6") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 4)
       // hand-craft a self-cycle: t registered as its own dependent MV
@@ -1360,14 +1317,13 @@ class Round16Spec extends SparkSpec {
         "the contained cycle must be surfaced, not silently dropped")
       val err = graft.sources.GraftMv.lastAutoRefreshError.get()
       assert(err != null && err.contains("cyclic"), String.valueOf(err))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("value-layout spec evolution: pre-evolution files degrade to a " +
       "full read under DPP; an OPTIMIZE rewrite migrates them and " +
       "restores exact pruning") {
-    val (cat, wh) = freshCatalog("vevo")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_vevo") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -1425,13 +1381,12 @@ class Round16Spec extends SparkSpec {
         s"every migrated file must be single-valued: $entries")
       // fully-migrated snapshot: DPP is exact again
       assert(emittedByFactScan() == matching)
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv: concurrent committers and manual refreshes never tear or " +
       "double-apply the view (watermark CAS + pinned state read)") {
-    val (cat, wh) = freshCatalog("mv7")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r16_mv7") { (cat, wh) =>
       mvFixture(cat)
       insertRange(cat, "t", 0, 8)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -1486,7 +1441,7 @@ class Round16Spec extends SparkSpec {
         graft.sources.GraftMv.AppId).get ==
         GraftVersions.latest(wh.resolve("t")).get.version,
         "the watermark must end at the source head")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv audits q282 and q285 compare the view with a rule-off side " +

@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
+import graft.ops.OpsUtil
 import graft.sources.GraftTableMeta
 
 /** Round-17 additions: the FILTERED materialized-view rewrite's
@@ -13,18 +12,6 @@ import graft.sources.GraftTableMeta
   * be silently wrong if the gates slipped. */
 class Round17Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r17_$tag")
-    val cat = s"r17_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def insertRange(cat: String, lo: Int, hi: Int): Unit = {
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", hi.toString).load()
@@ -53,8 +40,7 @@ class Round17Spec extends SparkSpec {
 
   test("filtered mv rewrite: a key-only predicate answers from the " +
       "view; mixed and non-key predicates refuse") {
-    val (cat, wh) = freshCatalog("fmv1")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r17_fmv1") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 20)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -89,13 +75,12 @@ class Round17Spec extends SparkSpec {
       val rand = agg("rand() < 0.999999")
       assert(!scansPath(rand, v),
         "a non-deterministic predicate must refuse")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv rewrite: a non-BIGINT key expression refuses both the " +
       "roll-up and the filtered substitution (type-changing nesting)") {
-    val (cat, wh) = freshCatalog("fmv2")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r17_fmv2") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 20)
       // n_words is INT: the resolved key expression is IntegerType,
@@ -116,13 +101,12 @@ class Round17Spec extends SparkSpec {
            |WHERE n_words % 5 = 2""".stripMargin)
       assert(!scansPath(filtered, v),
         "an INT key must not substitute into a filter predicate")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("mv cost choice: with several satisfying views the rule picks " +
       "the fewest-row one regardless of registration order") {
-    val (cat, wh) = freshCatalog("fmv3")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r17_fmv3") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 30)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -144,13 +128,12 @@ class Round17Spec extends SparkSpec {
            |FROM $cat.t GROUP BY doc_id""".stripMargin)
       assert(scansPath(perDoc, wh.resolve("fine")) &&
         !scansPath(perDoc, wh.resolve("coarse")))
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("min/max mv maintenance: updates recompute the touched group, " +
       "a fully-deleted group drops, and the wrong extremum refuses") {
-    val (cat, wh) = freshCatalog("fmv5")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r17_fmv5") { (cat, wh) =>
       spark.sql(
         s"""CREATE TABLE $cat.t (
            |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -200,13 +183,12 @@ class Round17Spec extends SparkSpec {
            |FROM $cat.t GROUP BY doc_id % 4""".stripMargin)
       assert(mn.exceptAll(real).isEmpty && real.exceptAll(mn).isEmpty)
       spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("join-mv rewrite: only the declared equi-join matches — a " +
       "different condition, an extra WHERE, or a foreign dim refuse") {
-    val (cat, wh) = freshCatalog("fmv6")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r17_fmv6") { (cat, wh) =>
       mkTable(cat)
       spark.sql(
         s"""CREATE TABLE $cat.d (
@@ -275,13 +257,12 @@ class Round17Spec extends SparkSpec {
            |LEFT JOIN $cat.d d ON f.doc_id % 4 = d.doc_id
            |GROUP BY d.doc_id""".stripMargin)
       assert(!scansPath(outer, vj), "an outer join must refuse")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("filtered rewrite composes with a MIN view: key predicate over " +
       "the extremum aggregate stays view-only, rule-off parity holds") {
-    val (cat, wh) = freshCatalog("fmv7")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r17_fmv7") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 20)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -301,13 +282,12 @@ class Round17Spec extends SparkSpec {
       assert(viaMv.exceptAll(real).isEmpty &&
         real.exceptAll(viaMv).isEmpty)
       spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("filtered mv rewrite: historical pin + key predicate compose " +
       "(time travel answered from view history behind the filter)") {
-    val (cat, wh) = freshCatalog("fmv4")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r17_fmv4") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 15)                                       // v1
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -336,6 +316,6 @@ class Round17Spec extends SparkSpec {
       // the deleted doc_id 3 is IN class 3: the historical answer must
       // still include it (3 + 8 + 13 → n_words 12+17+22)
       assert(viaMv.head().getLong(1) == 51L)
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

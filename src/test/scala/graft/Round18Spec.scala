@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import graft.ops.OpsUtil
 
 /** Round-18 additions: composite-key views, DECIMAL-sum views, the
   * dim-side auto-reseed, and HAVING over rewritten aggregates. The
@@ -11,18 +10,6 @@ import org.apache.spark.sql.functions._
   * query fixture cannot isolate. */
 class Round18Spec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_r18_$tag")
-    val cat = s"r18_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-  private def dropCatalog(cat: String, wh: java.nio.file.Path): Unit = {
-    spark.conf.unset(s"spark.sql.catalog.$cat")
-    spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-    org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-  }
   private def mkTable(cat: String, name: String = "t"): Unit =
     spark.sql(
       s"""CREATE TABLE $cat.$name (
@@ -55,8 +42,7 @@ class Round18Spec extends SparkSpec {
 
   test("composite-key view: refusals — raw-key predicate, non-key " +
       "predicate, wrong grain; COUNT(DISTINCT k1, k2) rewrites") {
-    val (cat, wh) = freshCatalog("ck1")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r18_ck1") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 24)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -95,13 +81,12 @@ class Round18Spec extends SparkSpec {
           s"FROM $cat.t")
       assert(sameResult(distinctPairs, real))
       spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("HAVING over a rewritten aggregate survives the substitution: " +
       "the filter plans over view rows, selected or not") {
-    val (cat, wh) = freshCatalog("hav1")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r18_hav1") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 30)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -139,13 +124,12 @@ class Round18Spec extends SparkSpec {
       assert(sameResult(unsel, unselected()))
       assert(sameResult(ru, rollup()))
       spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("join view dual registration: a dim DELETE reseeds inline — " +
       "no fact commit needed, the next plan is already view-only") {
-    val (cat, wh) = freshCatalog("dimreg")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r18_dimreg") { (cat, wh) =>
       mkTable(cat); mkTable(cat, "d")
       insertRange(cat, 0, 24)
       insertRange(cat, 0, 4, table = "d")
@@ -173,14 +157,13 @@ class Round18Spec extends SparkSpec {
       spark.conf.set("spark.graft.mv.rewrite", "false")
       assert(sameResult(after, q()))
       spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("decimal sums: maintenance stays exact across deletes; AVG " +
       "refuses; precision 19+ refuses at create; unscaled overflow " +
       "raises instead of wrapping") {
-    val (cat, wh) = freshCatalog("dec1")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r18_dec1") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 20)
       val sumExpr = "CAST(n_words AS DECIMAL(10,2)) * 1.25"
@@ -224,13 +207,12 @@ class Round18Spec extends SparkSpec {
         .mkString(" | ")
       assert(chain.contains("overflow"),
         s"expected an overflow raise, got: $chain")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("chain join view: refusals — wrong condition, extra side, " +
       "subset join; deeper chains work through the Scala API") {
-    val (cat, wh) = freshCatalog("chain1")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r18_chain1") { (cat, wh) =>
       mkTable(cat); mkTable(cat, "c"); mkTable(cat, "n")
       mkTable(cat, "x")
       insertRange(cat, 0, 24)
@@ -323,13 +305,12 @@ class Round18Spec extends SparkSpec {
            |GROUP BY y.doc_id""".stripMargin)
       assert(sameResult(deep, deepReal))
       spark.conf.unset("spark.graft.mv.rewrite")
-    } finally dropCatalog(cat, wh)
+    }
   }
 
   test("composite maintenance audit: the refresh procedure folds the " +
       "composite delta and the view's group count tracks deletes") {
-    val (cat, wh) = freshCatalog("ck2")
-    try {
+    OpsUtil.withScratchCatalog(spark, "r18_ck2") { (cat, wh) =>
       mkTable(cat)
       insertRange(cat, 0, 12)
       spark.sql(s"CALL $cat.system.create_mv(" +
@@ -346,6 +327,6 @@ class Round18Spec extends SparkSpec {
         .select("applied_changes", "groups").head()
       assert(r2.getLong(0) == 4L && r2.getLong(1) == 5L,
         "the emptied composite group must drop out of the view")
-    } finally dropCatalog(cat, wh)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.ops.OpsUtil
 
 /** Measured scale evidence — the claims PLANS.md makes about shuffle
   * volume, verified with the engine's own task metrics instead of plan
@@ -240,11 +241,7 @@ class ScaleProofSpec extends SparkSpec {
     // delta + view rows, then the |view|-row ordered swap write); a
     // re-seed-style refresh would scale with the corpus.
     def refreshShuffle(tag: String, corpusRows: Int): Long = {
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_sp_$tag")
-      val cat = tag + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "")
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      try {
+      OpsUtil.withScratchCatalog(spark, s"sp_$tag") { (cat, _) =>
         spark.sql(
           s"""CREATE TABLE $cat.t (
              |  doc_id BIGINT NOT NULL, title STRING NOT NULL,
@@ -261,10 +258,6 @@ class ScaleProofSpec extends SparkSpec {
           s"INSERT INTO $cat.t VALUES (${corpusRows + i}, 'd', 1, 7)"))
         shuffleRecords(
           spark.sql(s"CALL $cat.system.refresh_mv('v')").collect())
-      } finally {
-        spark.conf.unset(s"spark.sql.catalog.$cat")
-        spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-        org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
       }
     }
     val small = refreshShuffle("mvs", 2000)
@@ -283,11 +276,7 @@ class ScaleProofSpec extends SparkSpec {
     // against a 2k-row and a 20k-row fact corpus must shuffle the same
     // records; a reseed-style refresh would scale with the fact table.
     def refreshShuffle(tag: String, corpusRows: Int): Long = {
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_sp_$tag")
-      val cat = tag + wh.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "")
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-      try {
+      OpsUtil.withScratchCatalog(spark, s"sp_$tag") { (cat, _) =>
         Seq("t", "d").foreach { tbl =>
           spark.sql(
             s"""CREATE TABLE $cat.$tbl (
@@ -311,10 +300,6 @@ class ScaleProofSpec extends SparkSpec {
           s"INSERT INTO $cat.t VALUES (${corpusRows + i}, 'x', 1, 7)"))
         shuffleRecords(
           spark.sql(s"CALL $cat.system.refresh_mv('vj')").collect())
-      } finally {
-        spark.conf.unset(s"spark.sql.catalog.$cat")
-        spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-        org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
       }
     }
     val small = refreshShuffle("jvs", 2000)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.ops.OpsUtil
 import graft.sources.{GraftDocsSource, GraftVersions}
 
 /** Snapshot versioning + time travel on the DSv2 warehouse tables
@@ -13,21 +14,12 @@ import graft.sources.{GraftDocsSource, GraftVersions}
   */
 class VersioningSpec extends SparkSpec {
 
-  private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
-    val wh = Files.createTempDirectory(s"graft_ver_$tag")
-    val cat = s"ver_$tag"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
-    (cat, wh)
-  }
-
   private def docsRange(rows: Int) =
     spark.read.format("graft.sources.GraftDocsSource")
       .option("rows", rows.toString).load()
 
   test("every commit snapshots; VERSION/TIMESTAMP AS OF read history exactly") {
-    val (cat, wh) = freshCatalog("tt")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_tt") { (cat, wh) =>
       docsRange(30).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"UPDATE $cat.t SET n_words = 0 WHERE doc_id < 5")
@@ -89,16 +81,11 @@ class VersioningSpec extends SparkSpec {
       val pinned = catImpl.loadTable(Identifier.of(Array.empty, "t"), "1")
       assert(pinned.capabilities() ==
         java.util.EnumSet.of(TableCapability.BATCH_READ))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("vacuum keeps the last N snapshots and reclaims exactly the rest") {
-    val (cat, wh) = freshCatalog("vac")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_vac") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"UPDATE $cat.t SET n_words = 1 WHERE doc_id = 3")
@@ -132,16 +119,11 @@ class VersioningSpec extends SparkSpec {
         spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 1").collect()
       }
       assert(gone.getMessage.contains("available"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("TRUNCATE on a versioned table is an empty snapshot, not a delete") {
-    val (cat, wh) = freshCatalog("tr")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_tr") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"TRUNCATE TABLE $cat.t")
@@ -151,16 +133,11 @@ class VersioningSpec extends SparkSpec {
       val dir = wh.resolve("t")
       assert(GraftVersions.latest(dir).exists(v =>
         v.op == "truncate" && v.files.isEmpty))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("concurrent disjoint-scope commits serialize into consecutive snapshots") {
-    val (cat, wh) = freshCatalog("cc")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_cc") { (cat, wh) =>
       docsRange(40).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       import scala.concurrent.{Await, Future}
@@ -179,17 +156,12 @@ class VersioningSpec extends SparkSpec {
       assert(live == (0L until 40L).map(i =>
         (i, if (i < 10) 11 else if (i >= 30) 22
             else GraftDocsSource.nWords(i))))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("version feed streams one commit per batch and resumes from checkpoint") {
-    val (cat, wh) = freshCatalog("sf")
     val base = Files.createTempDirectory("graft_feed")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "ver_sf") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0 + v1
       spark.sql(s"INSERT INTO $cat.t SELECT doc_id, title, fp, n_words " +
@@ -218,18 +190,12 @@ class VersioningSpec extends SparkSpec {
       val ids2 = spark.read.parquet(s"$base/data")
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(ids2 == ((0L until 10L) ++ Seq(100L, 101L, 200L)))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
   }
 
   test("version feed rejects rewrite commits unless ignoreChanges is set") {
-    val (cat, wh) = freshCatalog("rw")
     val base = Files.createTempDirectory("graft_feed_rw")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "ver_rw") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"UPDATE $cat.t SET n_words = 0 WHERE doc_id = 3") // rewrite
@@ -260,18 +226,12 @@ class VersioningSpec extends SparkSpec {
       assert(rows.count(_._1 == 3L) == 2, "doc 3 appears pre- and post-rewrite")
       assert(rows.contains((3L, 0)))
       assert(rows.map(_._1).distinct.sorted == (0L until 10L))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
   }
 
   test("version feed: vacuum fails stale checkpoints, fresh streams snapshot") {
-    val (cat, wh) = freshCatalog("vf")
     val base = Files.createTempDirectory("graft_feed_vac")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "ver_vf") { (cat, wh) =>
       docsRange(6).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0, v1
       def drain(tag: String): Unit = {
@@ -299,18 +259,12 @@ class VersioningSpec extends SparkSpec {
       val ids = spark.read.parquet(s"$base/fresh/data")
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(ids == ((0L until 6L) ++ Seq(50L, 51L)))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
   }
 
   test("compaction is a dataChange=false commit: fewer files, same rows, feed silent") {
-    val (cat, wh) = freshCatalog("cp")
     val base = Files.createTempDirectory("graft_feed_cp")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "ver_cp") { (cat, wh) =>
       docsRange(12).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0, v1
       spark.sql(s"INSERT INTO $cat.t SELECT 50L, 'x', 9L, 7") // v2
@@ -347,17 +301,11 @@ class VersioningSpec extends SparkSpec {
       GraftVersions.vacuum(dir, keepLast = 2) // keeps v3 (compact), v4
       assert(spark.table(s"$cat.t").count() == 14)
       assert(spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 3").count() == 13)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
   }
 
   test("restore rewinds the live state via a new commit, preserving history") {
-    val (cat, wh) = freshCatalog("rs")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_rs") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()        // v0, v1
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id >= 5")    // v2
@@ -380,16 +328,11 @@ class VersioningSpec extends SparkSpec {
       GraftVersions.vacuum(dir, keepLast = 2)
       val err = intercept[Exception] { GraftVersions.restore(dir, 1L) }
       assert(err.getMessage.contains("available"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("the history metadata table exposes the commit log to SQL") {
-    val (cat, wh) = freshCatalog("hi")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_hi") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t")
         .tableProperty("versioned", "true").create()
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id >= 8")
@@ -413,16 +356,11 @@ class VersioningSpec extends SparkSpec {
         spark.sql(s"SELECT * FROM $cat.plain.history").collect() }
       intercept[Exception] {
         spark.sql(s"SELECT * FROM $cat.t.nonsense").collect() }
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("manifest min/max stats skip files disjoint from a pushed doc_id range") {
-    val (cat, wh) = freshCatalog("fs")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_fs") { (cat, wh) =>
       // three clamped appends of 2 files each: ranges [0,5) [5,10) |
       // [10,15) [15,20) | [20,25) [25,30)
       spark.read.format("graft.sources.GraftDocsSource")
@@ -466,16 +404,11 @@ class VersioningSpec extends SparkSpec {
       assert(spark.sql(
         s"SELECT COUNT(*) FROM $cat.t VERSION AS OF 3 WHERE doc_id < 5")
         .head().getLong(0) == 5)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("unversioned tables keep the original delete-on-rewrite behavior") {
-    val (cat, wh) = freshCatalog("uv")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_uv") { (cat, wh) =>
       docsRange(10).writeTo(s"$cat.t").create()
       val dir = wh.resolve("t")
       assert(!GraftVersions.isVersioned(dir))
@@ -486,16 +419,11 @@ class VersioningSpec extends SparkSpec {
         spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 0").collect()
       }
       assert(err.getMessage.contains("not versioned"))
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("commits record multi-column stats; old doc_id-only manifests still read") {
-    val (cat, wh) = freshCatalog("mc")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_mc") { (cat, wh) =>
       docsRange(20).writeTo(s"$cat.t").tableProperty("versioned", "true")
         .create()
       val dir = wh.resolve("t")
@@ -521,16 +449,11 @@ class VersioningSpec extends SparkSpec {
       assert(parsed.entries == Seq(
         GraftVersions.FileEntry("old-file.tsv", Map("doc_id" -> (3L, 7L)))))
       Files.delete(old)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("Z-order compaction yields quadrant-pure files skippable on every axis") {
-    val (cat, wh) = freshCatalog("zo")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_zo") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(256).repartition(8, col("fp"))
         .writeTo(s"$cat.t").tableProperty("versioned", "true").create()
@@ -556,17 +479,12 @@ class VersioningSpec extends SparkSpec {
       assert(spark.table(s"$cat.t").count() == 256)
       assert(spark.sql(
         s"SELECT COUNT(DISTINCT doc_id) FROM $cat.t").head.getLong(0) == 256)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("streaming sink: exactly-once epochs, replay skipped, restart-stable appId") {
-    val (cat, wh) = freshCatalog("sw")
     val cp = Files.createTempDirectory("graft_ckpt_sw")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "ver_sw") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.src").tableProperty("versioned", "true")
         .create()
@@ -623,12 +541,7 @@ class VersioningSpec extends SparkSpec {
         org.apache.commons.io.FileUtils.deleteDirectory(
           Paths.get(s"$cp-plain").toFile)
       }
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   test("bloom filters: exact-absence skipping, roundtrip, survival through compact") {
@@ -645,8 +558,7 @@ class VersioningSpec extends SparkSpec {
     val rt = GraftBloom.fromBase64(b.toBase64)
     assert(rt.bits.toSeq == b.bits.toSeq, "base64 roundtrip")
 
-    val (cat, wh) = freshCatalog("bl")
-    try {
+    OpsUtil.withScratchCatalog(spark, "ver_bl") { (cat, wh) =>
       docsRange(256)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("bloom.columns", "fp,title").create()
@@ -675,17 +587,12 @@ class VersioningSpec extends SparkSpec {
       assert(spark.sql(
         s"SELECT * FROM $cat.t WHERE fp = ${GraftDocsSource.fp(100L)}")
         .count() == 1)
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
   }
 
   test("CHECK constraints reject bad writes atomically, incl. streaming") {
-    val (cat, wh) = freshCatalog("ck")
     val cp = Files.createTempDirectory("graft_ckpt_ck")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "ver_ck") { (cat, wh) =>
       docsRange(10)
         .writeTo(s"$cat.t").tableProperty("versioned", "true")
         .tableProperty("check.words", "n_words BETWEEN 9 AND 99").create()
@@ -722,18 +629,12 @@ class VersioningSpec extends SparkSpec {
       // epochs before the bad commit landed; the bad epoch did not
       val live = spark.table(s"$cat.t").count()
       assert(live == 15, s"good epochs in, bad epoch out: $live")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 
   test("streaming sink Complete mode: each epoch replaces the live snapshot") {
-    val (cat, wh) = freshCatalog("swc")
     val cp = Files.createTempDirectory("graft_ckpt_swc")
-    try {
+    try OpsUtil.withScratchCatalog(spark, "ver_swc") { (cat, wh) =>
       import org.apache.spark.sql.functions._
       docsRange(10).writeTo(s"$cat.src").tableProperty("versioned", "true")
         .create()
@@ -772,11 +673,6 @@ class VersioningSpec extends SparkSpec {
       val dstDir = wh.resolve("dst")
       val ops = GraftVersions.listVersions(dstDir).map(_.op)
       assert(ops.count(_ == "streaming-complete") >= 2, s"ops: $ops")
-    } finally {
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
-      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cp.toFile)
   }
 }
