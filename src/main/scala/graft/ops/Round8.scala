@@ -699,9 +699,14 @@ object Round8 {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
         df.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      // unsetting the key leaves the catalog this query instantiated
+      if (spark.conf.getOption("spark.sql.catalog.graft_cat").isEmpty)
+        org.apache.spark.sql.GraftBridge.dropCatalog(spark, "graft_cat")
     }
   }
 

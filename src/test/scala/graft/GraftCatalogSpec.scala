@@ -131,21 +131,22 @@ class GraftCatalogSpec extends SparkSpec {
       // outside the warehouse (backquoted SQL idents can contain anything)
       // are rejected BEFORE any filesystem action — a traversal ident must
       // never reach DROP's deleteDirectory or RENAME's move
-      val outside = java.nio.file.Files.createTempDirectory("graft_cat_victim")
-      java.nio.file.Files.writeString(outside.resolve("keep.txt"), "x")
-      val escape = outside.getFileName.toString
-      for (ident <- Seq(
-          Identifier.of(Array(".."), escape),
-          Identifier.of(Array.empty, s"../$escape"),
-          Identifier.of(Array("a", ".."), ".."),
-          Identifier.of(Array.empty, "..")))
-        intercept[IllegalArgumentException] { cat.dropTable(ident) }
-      intercept[IllegalArgumentException] {
-        cat.renameTable(Identifier.of(Array.empty, "docs2"),
-          Identifier.of(Array(".."), escape))
+      withTempDir("graft_cat_victim") { outside =>
+        java.nio.file.Files.writeString(outside.resolve("keep.txt"), "x")
+        val escape = outside.getFileName.toString
+        for (ident <- Seq(
+            Identifier.of(Array(".."), escape),
+            Identifier.of(Array.empty, s"../$escape"),
+            Identifier.of(Array("a", ".."), ".."),
+            Identifier.of(Array.empty, "..")))
+          intercept[IllegalArgumentException] { cat.dropTable(ident) }
+        intercept[IllegalArgumentException] {
+          cat.renameTable(Identifier.of(Array.empty, "docs2"),
+            Identifier.of(Array(".."), escape))
+        }
+        assert(java.nio.file.Files.exists(outside.resolve("keep.txt")),
+          "traversal identifier escaped the warehouse and touched a victim dir")
       }
-      assert(java.nio.file.Files.exists(outside.resolve("keep.txt")),
-        "traversal identifier escaped the warehouse and touched a victim dir")
     }
   }
 

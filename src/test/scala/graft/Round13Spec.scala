@@ -63,12 +63,14 @@ class Round13Spec extends SparkSpec {
 
   test("bench trend file: header must match the run's sf dir; malformed lines skipped") {
     val f = java.nio.file.Files.createTempFile("trend", ".tsv")
-    java.nio.file.Files.writeString(f,
-      "sf /root/testdata/sf0.1\nq01 0.50\nq43 2.00\nbadline\nq99 notanumber\n")
-    val m = Bench.recordedMedians(f.toString, "/root/testdata/sf0.1")
-    assert(m == Map("q01" -> 0.50, "q43" -> 2.00))
-    // recorded at a different SF → gate off entirely
-    assert(Bench.recordedMedians(f.toString, "/root/testdata/sf0.01").isEmpty)
+    try {
+      java.nio.file.Files.writeString(f,
+        "sf /root/testdata/sf0.1\nq01 0.50\nq43 2.00\nbadline\nq99 notanumber\n")
+      val m = Bench.recordedMedians(f.toString, "/root/testdata/sf0.1")
+      assert(m == Map("q01" -> 0.50, "q43" -> 2.00))
+      // recorded at a different SF → gate off entirely
+      assert(Bench.recordedMedians(f.toString, "/root/testdata/sf0.01").isEmpty)
+    } finally java.nio.file.Files.delete(f)
     // absent file → gate off
     assert(Bench.recordedMedians("/nonexistent/trend.tsv", "x").isEmpty)
   }

@@ -109,19 +109,21 @@ class Round4Spec extends SparkSpec {
     // foreachBatch batchId must REPLACE its own partition and leave every
     // other batch's partition untouched
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_replay").toString
-    def write(batchId: Long, rows: Seq[(String, Long)]): Unit =
-      rows.toDF("event_type", "n")
-        .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(out)
-    write(0L, Seq(("click", 3L), ("view", 5L)))
-    write(1L, Seq(("click", 7L)))
-    write(0L, Seq(("click", 3L), ("view", 5L))) // failure-replay of batch 0
-    val back = spark.read.parquet(out)
-    assert(back.count() == 3) // batch 0 replaced (not appended), batch 1 intact
-    assert(back.filter($"batch_id" === 1L).count() == 1)
+    withTempDir("graft_replay") { tmp =>
+      val out = tmp.toString
+      def write(batchId: Long, rows: Seq[(String, Long)]): Unit =
+        rows.toDF("event_type", "n")
+          .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(out)
+      write(0L, Seq(("click", 3L), ("view", 5L)))
+      write(1L, Seq(("click", 7L)))
+      write(0L, Seq(("click", 3L), ("view", 5L))) // failure-replay of batch 0
+      val back = spark.read.parquet(out)
+      assert(back.count() == 3) // batch 0 replaced (not appended), batch 1 intact
+      assert(back.filter($"batch_id" === 1L).count() == 1)
+    }
   }
 
   test("q91 integer pagerank matches a driver-side brute force") {

@@ -333,10 +333,23 @@ class Round8Spec extends SparkSpec {
       assert(offRows.map(_.toString).sorted.sameElements(
         rows.map(_.toString).sorted),
         "bucketed and shuffle plans must agree")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      if (spark.conf.getOption("spark.sql.catalog.graft_cat").isEmpty)
+        org.apache.spark.sql.GraftBridge.dropCatalog(spark, "graft_cat")
     }
+  }
+
+  test("q136 leaves the instantiated catalogs and the conf as it found them") {
+    import org.apache.spark.sql.GraftBridge
+    val before = (GraftBridge.instantiatedCatalogs(spark), spark.conf.getAll)
+    assert(ops.Round8.q136StoragePartitionedJoin(spark, sf).collect().length == 5)
+    assert(GraftBridge.instantiatedCatalogs(spark) == before._1,
+      (GraftBridge.instantiatedCatalogs(spark) -- before._1).mkString(", "))
+    assert(spark.conf.getAll == before._2)
   }
 
   test("q129: transition count conserves events minus journeys") {

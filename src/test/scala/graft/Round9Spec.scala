@@ -529,27 +529,29 @@ class Round9Spec extends SparkSpec {
     // leftovers.
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    val dir = java.nio.file.Files.createTempDirectory("graft_wretry").toString
-    val bw = new sources.GraftDocsBatchWrite(
-      dir, "q-retry-spec", sources.GraftDocsSource.schema, false)
-    val factory = bw.createBatchWriterFactory(null)
-    def row(id: Long): InternalRow = InternalRow.fromSeq(Seq(
-      id, UTF8String.fromString(s"doc-$id"), id * 7L, 10))
-    val w1 = factory.createWriter(0, 1L)
-    w1.write(row(991L)) // doomed attempt's data must never surface
-    w1.abort()
-    val w2 = factory.createWriter(0, 2L)
-    w2.write(row(1L)); w2.write(row(2L))
-    val msg = w2.commit()
-    bw.commit(Array(msg))
-    val files = new java.io.File(dir).listFiles().map(_.getName).sorted
-    assert(files.toSeq == Seq("_SUCCESS", "part-00000.tsv"),
-      s"committed dir must hold exactly the final file set, got ${files.toSeq}")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(dir, "part-00000.tsv"))
-    assert(lines.size == 2 && lines.get(0).startsWith("1\t")
-      && lines.get(1).startsWith("2\t"),
-      "exactly attempt 2's rows, in write order")
+    withTempDir("graft_wretry") { tmp =>
+      val dir = tmp.toString
+      val bw = new sources.GraftDocsBatchWrite(
+        dir, "q-retry-spec", sources.GraftDocsSource.schema, false)
+      val factory = bw.createBatchWriterFactory(null)
+      def row(id: Long): InternalRow = InternalRow.fromSeq(Seq(
+        id, UTF8String.fromString(s"doc-$id"), id * 7L, 10))
+      val w1 = factory.createWriter(0, 1L)
+      w1.write(row(991L)) // doomed attempt's data must never surface
+      w1.abort()
+      val w2 = factory.createWriter(0, 2L)
+      w2.write(row(1L)); w2.write(row(2L))
+      val msg = w2.commit()
+      bw.commit(Array(msg))
+      val files = new java.io.File(dir).listFiles().map(_.getName).sorted
+      assert(files.toSeq == Seq("_SUCCESS", "part-00000.tsv"),
+        s"committed dir must hold exactly the final file set, got ${files.toSeq}")
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(dir, "part-00000.tsv"))
+      assert(lines.size == 2 && lines.get(0).startsWith("1\t")
+        && lines.get(1).startsWith("2\t"),
+        "exactly attempt 2's rows, in write order")
+    }
   }
 
   test("q158: a trained PQ codebook reconstructs no worse than the untrained init") {

@@ -9,6 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp directory named `prefix…` and deletes
+    * the directory after it, whether `body` returns or throws. */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }
 
 object SparkSpec {

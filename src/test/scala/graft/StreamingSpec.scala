@@ -147,116 +147,125 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch writes per-batch aggregates through the batch API") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_fb").toString
-    val mem = MemoryStream[Event]
-    mem.addData(
-      Event(1, ts(1), 10, "click", 1.0),
-      Event(2, ts(2), 10, "click", 2.0),
-      Event(3, ts(3), 11, "view", 4.0))
-    val q = StreamingOps.perBatchTypeTotals(mem.toDF(), out).start()
-    try {
-      q.processAllAvailable()
-      mem.addData(Event(4, ts(4), 12, "click", 8.0))
-      q.processAllAvailable()
-      val all = spark.read.parquet(out)
-      // two micro-batches → two partition dirs; totals add up across both
-      assert(all.select("batch_id").distinct().count() == 2)
-      val clicks = all.filter($"event_type" === "click")
-        .agg(org.apache.spark.sql.functions.sum($"total_value")).head().getDouble(0)
-      assert(clicks == 11.0)
-    } finally q.stop()
+    withTempDir("graft_fb") { tmp =>
+      val out = tmp.toString
+      val mem = MemoryStream[Event]
+      mem.addData(
+        Event(1, ts(1), 10, "click", 1.0),
+        Event(2, ts(2), 10, "click", 2.0),
+        Event(3, ts(3), 11, "view", 4.0))
+      val q = StreamingOps.perBatchTypeTotals(mem.toDF(), out).start()
+      try {
+        q.processAllAvailable()
+        mem.addData(Event(4, ts(4), 12, "click", 8.0))
+        q.processAllAvailable()
+        val all = spark.read.parquet(out)
+        // two micro-batches → two partition dirs; totals add up across both
+        assert(all.select("batch_id").distinct().count() == 2)
+        val clicks = all.filter($"event_type" === "click")
+          .agg(org.apache.spark.sql.functions.sum($"total_value")).head().getDouble(0)
+        assert(clicks == 11.0)
+      } finally q.stop()
+    }
   }
 
   test("incremental waterfall dedups across micro-batches through the persistent ledger") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val state = java.nio.file.Files.createTempDirectory("graft_wf").toString
-    // quality-passing text: 50 distinct 7-char words → 399 chars,
-    // diversity 1e6 ppm, avg word length 7 (the q196/q182 rules)
-    val goodA = (0 until 50).map(i => f"alpha$i%02d").mkString(" ")
-    val goodB = (0 until 50).map(i => f"bravo$i%02d").mkString(" ")
-    val mem = MemoryStream[CurDoc]
-    mem.addData(
-      CurDoc(1, goodA, goodA.length.toLong),
-      CurDoc(2, goodA, goodA.length.toLong),   // in-batch duplicate
-      CurDoc(3, "tiny doc", 8L))               // unique but low-quality
-    val q = StreamingOps.incrementalWaterfall(mem.toDF(), state).start()
-    try {
-      q.processAllAvailable()
+    withTempDir("graft_wf") { tmp =>
+      val state = tmp.toString
+      // quality-passing text: 50 distinct 7-char words → 399 chars,
+      // diversity 1e6 ppm, avg word length 7 (the q196/q182 rules)
+      val goodA = (0 until 50).map(i => f"alpha$i%02d").mkString(" ")
+      val goodB = (0 until 50).map(i => f"bravo$i%02d").mkString(" ")
+      val mem = MemoryStream[CurDoc]
       mem.addData(
-        CurDoc(4, goodA, goodA.length.toLong), // CROSS-batch duplicate
-        CurDoc(5, goodB, goodB.length.toLong))
-      q.processAllAvailable()
-      val totals = StreamingOps.waterfallTotals(spark, state)
-        .select("stage", "n_docs", "n_tokens", "token_retained_ppm")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      // raw: all 5 arrivals, 50+50+2+50+50 tokens
-      assert(totals(0) == (("1_raw", 5L, 202L, 1000000L)))
-      // exact dedup: docs 1,3,5 survive (2 in-batch dup, 4 cross-batch dup)
-      assert(totals(1) == (("2_exact_dedup", 3L, 102L, 102L * 1000000L / 202L)))
-      // quality: docs 1,5
-      assert(totals(2) == (("3_quality", 2L, 100L, 100L * 1000000L / 202L)))
-      // the ledger admitted exactly the 3 exact-dedup survivors
-      assert(spark.read.parquet(s"$state/seen").select("h").distinct().count() == 3)
-    } finally q.stop()
+        CurDoc(1, goodA, goodA.length.toLong),
+        CurDoc(2, goodA, goodA.length.toLong),   // in-batch duplicate
+        CurDoc(3, "tiny doc", 8L))               // unique but low-quality
+      val q = StreamingOps.incrementalWaterfall(mem.toDF(), state).start()
+      try {
+        q.processAllAvailable()
+        mem.addData(
+          CurDoc(4, goodA, goodA.length.toLong), // CROSS-batch duplicate
+          CurDoc(5, goodB, goodB.length.toLong))
+        q.processAllAvailable()
+        val totals = StreamingOps.waterfallTotals(spark, state)
+          .select("stage", "n_docs", "n_tokens", "token_retained_ppm")
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        // raw: all 5 arrivals, 50+50+2+50+50 tokens
+        assert(totals(0) == (("1_raw", 5L, 202L, 1000000L)))
+        // exact dedup: docs 1,3,5 survive (2 in-batch dup, 4 cross-batch dup)
+        assert(totals(1) == (("2_exact_dedup", 3L, 102L, 102L * 1000000L / 202L)))
+        // quality: docs 1,5
+        assert(totals(2) == (("3_quality", 2L, 100L, 100L * 1000000L / 202L)))
+        // the ledger admitted exactly the 3 exact-dedup survivors
+        assert(spark.read.parquet(s"$state/seen").select("h").distinct().count() == 3)
+      } finally q.stop()
+    }
   }
 
   test("waterfall batch replay is idempotent (at-least-once foreachBatch contract)") {
     import spark.implicits._
-    val state = java.nio.file.Files.createTempDirectory("graft_wf_replay").toString
-    val goodA = (0 until 50).map(i => f"alpha$i%02d").mkString(" ")
-    val goodB = (0 until 50).map(i => f"bravo$i%02d").mkString(" ")
-    val b0 = Seq(CurDoc(1, goodA, goodA.length.toLong),
-      CurDoc(2, "tiny doc", 8L)).toDF()
-    val b1 = Seq(CurDoc(3, goodA, goodA.length.toLong), // dup of batch 0
-      CurDoc(4, goodB, goodB.length.toLong)).toDF()
-    StreamingOps.waterfallBatch(b0, 0L, state)
-    StreamingOps.waterfallBatch(b1, 1L, state)
-    def snapshot() = StreamingOps.waterfallTotals(spark, state)
-      .collect().map(_.toSeq).toSeq
-    val before = snapshot()
-    // a failure between commit and checkpoint re-delivers the SAME
-    // batch: dynamic partition overwrite + the ledger read excluding the
-    // current batch_id must reproduce identical state, not double-count
-    StreamingOps.waterfallBatch(b1, 1L, state)
-    assert(snapshot() == before, "replaying batch 1 changed the totals")
-    StreamingOps.waterfallBatch(b0, 0L, state)
-    assert(snapshot() == before, "replaying batch 0 changed the totals")
-    // raw = 4 docs; exact-dedup = 3 (doc 3 is a cross-batch dup);
-    // quality = 2 (alpha + bravo)
-    val byStage = before.map(r => r.head.toString -> (r(1), r(2))).toMap
-    assert(byStage("1_raw") == ((4L, 152L)))         // 50+2+50+50 tokens
-    assert(byStage("2_exact_dedup") == ((3L, 102L))) // doc 3 deduped
-    assert(byStage("3_quality") == ((2L, 100L)))     // alpha + bravo
+    withTempDir("graft_wf_replay") { tmp =>
+      val state = tmp.toString
+      val goodA = (0 until 50).map(i => f"alpha$i%02d").mkString(" ")
+      val goodB = (0 until 50).map(i => f"bravo$i%02d").mkString(" ")
+      val b0 = Seq(CurDoc(1, goodA, goodA.length.toLong),
+        CurDoc(2, "tiny doc", 8L)).toDF()
+      val b1 = Seq(CurDoc(3, goodA, goodA.length.toLong), // dup of batch 0
+        CurDoc(4, goodB, goodB.length.toLong)).toDF()
+      StreamingOps.waterfallBatch(b0, 0L, state)
+      StreamingOps.waterfallBatch(b1, 1L, state)
+      def snapshot() = StreamingOps.waterfallTotals(spark, state)
+        .collect().map(_.toSeq).toSeq
+      val before = snapshot()
+      // a failure between commit and checkpoint re-delivers the SAME
+      // batch: dynamic partition overwrite + the ledger read excluding the
+      // current batch_id must reproduce identical state, not double-count
+      StreamingOps.waterfallBatch(b1, 1L, state)
+      assert(snapshot() == before, "replaying batch 1 changed the totals")
+      StreamingOps.waterfallBatch(b0, 0L, state)
+      assert(snapshot() == before, "replaying batch 0 changed the totals")
+      // raw = 4 docs; exact-dedup = 3 (doc 3 is a cross-batch dup);
+      // quality = 2 (alpha + bravo)
+      val byStage = before.map(r => r.head.toString -> (r(1), r(2))).toMap
+      assert(byStage("1_raw") == ((4L, 152L)))         // 50+2+50+50 tokens
+      assert(byStage("2_exact_dedup") == ((3L, 102L))) // doc 3 deduped
+      assert(byStage("3_quality") == ((2L, 100L)))     // alpha + bravo
+    }
   }
 
   test("waterfallTotals on a fresh pipeline (no batches yet) is empty, not a throw") {
-    val state = java.nio.file.Files.createTempDirectory("graft_wf_empty").toString
-    val totals = StreamingOps.waterfallTotals(spark, s"$state/never_started")
-    assert(totals.columns.toSeq ==
-      Seq("stage", "n_docs", "n_tokens", "token_retained_ppm"))
-    assert(totals.count() == 0)
+    withTempDir("graft_wf_empty") { tmp =>
+      val state = tmp.toString
+      val totals = StreamingOps.waterfallTotals(spark, s"$state/never_started")
+      assert(totals.columns.toSeq ==
+        Seq("stage", "n_docs", "n_tokens", "token_retained_ppm"))
+      assert(totals.count() == 0)
+    }
   }
 
   test("Trigger.AvailableNow drains the stream to parquet and stops") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_an")
-    val mem = MemoryStream[Event]
-    mem.addData(
-      Event(1, ts(1), 10, "click", 1.0),
-      Event(2, ts(2), 11, "view", 2.0))
-    val q = StreamingOps.drainToParquet(mem.toDF(),
-      s"$base/data", s"$base/ckpt")
-    q.awaitTermination(60000) // AvailableNow terminates on its own
-    assert(!q.isActive)
-    assert(spark.read.parquet(s"$base/data").count() == 2)
-    // a second drain resumes from the checkpoint: only NEW rows land
-    mem.addData(Event(3, ts(3), 12, "click", 3.0))
-    val q2 = StreamingOps.drainToParquet(mem.toDF(),
-      s"$base/data", s"$base/ckpt")
-    q2.awaitTermination(60000)
-    assert(spark.read.parquet(s"$base/data").count() == 3)
+    withTempDir("graft_an") { base =>
+      val mem = MemoryStream[Event]
+      mem.addData(
+        Event(1, ts(1), 10, "click", 1.0),
+        Event(2, ts(2), 11, "view", 2.0))
+      val q = StreamingOps.drainToParquet(mem.toDF(),
+        s"$base/data", s"$base/ckpt")
+      q.awaitTermination(60000) // AvailableNow terminates on its own
+      assert(!q.isActive)
+      assert(spark.read.parquet(s"$base/data").count() == 2)
+      // a second drain resumes from the checkpoint: only NEW rows land
+      mem.addData(Event(3, ts(3), 12, "click", 3.0))
+      val q2 = StreamingOps.drainToParquet(mem.toDF(),
+        s"$base/data", s"$base/ckpt")
+      q2.awaitTermination(60000)
+      assert(spark.read.parquet(s"$base/data").count() == 3)
+    }
   }
 
   test("csv file-stream drives stateful dedup and resumes exactly-once from its checkpoint") {
@@ -267,31 +276,32 @@ class StreamingSpec extends SparkSpec {
     // reprocessed) and state restoration (a cross-run replay of event 2
     // under a FRESH timestamp is dropped by the restored dedup state,
     // not by file dedup).
-    val base = java.nio.file.Files.createTempDirectory("graft_fsrc")
-    val src = s"$base/src"
-    new java.io.File(src).mkdirs()
-    def drop(name: String, rows: String*): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-    drop("f1.csv",
-      "1,1970-01-01 01:01:00,10,click,1.0",
-      "2,1970-01-01 01:02:00,11,view,2.0",
-      "2,1970-01-01 01:02:00,11,view,2.0") // in-file duplicate id
-    def drain() = {
-      val q = StreamingOps.drainToParquet(
-        StreamingOps.dedupStream(StreamingOps.eventCsvStream(spark, src)),
-        s"$base/data", s"$base/ckpt")
-      q.awaitTermination(60000)
-      assert(!q.isActive)
-      spark.read.parquet(s"$base/data")
-        .select($"event_id").as[Long].collect().sorted.toSeq
+    withTempDir("graft_fsrc") { base =>
+      val src = s"$base/src"
+      new java.io.File(src).mkdirs()
+      def drop(name: String, rows: String*): Unit =
+        java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
+          rows.mkString("\n").getBytes("UTF-8"))
+      drop("f1.csv",
+        "1,1970-01-01 01:01:00,10,click,1.0",
+        "2,1970-01-01 01:02:00,11,view,2.0",
+        "2,1970-01-01 01:02:00,11,view,2.0") // in-file duplicate id
+      def drain() = {
+        val q = StreamingOps.drainToParquet(
+          StreamingOps.dedupStream(StreamingOps.eventCsvStream(spark, src)),
+          s"$base/data", s"$base/ckpt")
+        q.awaitTermination(60000)
+        assert(!q.isActive)
+        spark.read.parquet(s"$base/data")
+          .select($"event_id").as[Long].collect().sorted.toSeq
+      }
+      assert(drain() == Seq(1L, 2L), "in-file duplicate must dedup")
+      drop("f2.csv",
+        "2,1970-01-01 01:03:00,11,view,2.0", // replay, fresh ts, inside watermark
+        "3,1970-01-01 01:04:00,12,click,3.0")
+      assert(drain() == Seq(1L, 2L, 3L),
+        "restart must skip processed files AND drop the replay via restored state")
     }
-    assert(drain() == Seq(1L, 2L), "in-file duplicate must dedup")
-    drop("f2.csv",
-      "2,1970-01-01 01:03:00,11,view,2.0", // replay, fresh ts, inside watermark
-      "3,1970-01-01 01:04:00,12,click,3.0")
-    assert(drain() == Seq(1L, 2L, 3L),
-      "restart must skip processed files AND drop the replay via restored state")
   }
 
   test("streaming CMS: the cross-batch grid equals the batch grid and never underestimates") {
@@ -408,30 +418,31 @@ class StreamingSpec extends SparkSpec {
 
   test("custom DSv2 stream resumes at the committed offset when the table grows") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_dsv2s")
-    def drain(rows: Int): Long = {
-      val q = spark.readStream.format("graft.sources.GraftDocsSource")
-        .option("rows", rows.toString).option("partitions", "4")
-        .option("streamBatchRows", "40")
-        .load()
-        .select($"doc_id")
-        .writeStream.format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode(OutputMode.Append()).start()
-      q.awaitTermination(60000)
-      assert(!q.isActive)
-      spark.read.parquet(s"$base/data").count()
+    withTempDir("graft_dsv2s") { base =>
+      def drain(rows: Int): Long = {
+        val q = spark.readStream.format("graft.sources.GraftDocsSource")
+          .option("rows", rows.toString).option("partitions", "4")
+          .option("streamBatchRows", "40")
+          .load()
+          .select($"doc_id")
+          .writeStream.format("parquet")
+          .option("path", s"$base/data")
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .outputMode(OutputMode.Append()).start()
+        q.awaitTermination(60000)
+        assert(!q.isActive)
+        spark.read.parquet(s"$base/data").count()
+      }
+      assert(drain(60) == 60L)
+      // the table "grows" to 100 rows; the restart must re-enter at the
+      // checkpointed offset 60 and emit ONLY the 40 new ids
+      assert(drain(100) == 100L)
+      val ids = spark.read.parquet(s"$base/data")
+        .select($"doc_id").as[Long].collect().sorted.toSeq
+      assert(ids == (0L until 100L).toSeq,
+        "no id duplicated or skipped across the restart")
     }
-    assert(drain(60) == 60L)
-    // the table "grows" to 100 rows; the restart must re-enter at the
-    // checkpointed offset 60 and emit ONLY the 40 new ids
-    assert(drain(100) == 100L)
-    val ids = spark.read.parquet(s"$base/data")
-      .select($"doc_id").as[Long].collect().sorted.toSeq
-    assert(ids == (0L until 100L).toSeq,
-      "no id duplicated or skipped across the restart")
   }
 
   test("stream-static join enriches each batch from a broadcast dimension") {
@@ -698,9 +709,13 @@ class StreamingSpec extends SparkSpec {
         .as[StreamingOps.UserTotal].collect().maxBy(_.n_events)
       assert(latest == StreamingOps.UserTotal(10, 2, 3.0),
         s"state did not survive the restart: $latest")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+      Seq(ckpt, outDir).foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
   }
 
