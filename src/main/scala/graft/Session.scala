@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local SparkSession that Bench, Verify, Profile, DebugShuffle
-  * and Explain run on, so every tool plans and times the same plans. Its
+/** The one local SparkSession that Bench, Verify, Profile and Explain
+  * run on, so every tool plans and times the same plans. Its
   * settings are the ones graftbench's `Harness.session` uses (which adds
   * only its own local and warehouse directories). */
 object Session {

@@ -87,17 +87,19 @@ object Extended {
   }
 
   /** The spark.sql(...) entry point with an IN-subquery (Catalyst rewrites
-    * it to a semi join) over registered temp views. */
+    * it to a semi join) over registered temp views. The views are dropped
+    * once `spark.sql` has analysed the query: the frame keeps their plans. */
   val q49SqlSubquery: Q = (spark, dir) => {
     Tables.orders(spark, dir).createOrReplaceTempView("orders_v")
     Tables.customer(spark, dir).createOrReplaceTempView("customer_v")
-    spark.sql(
+    try spark.sql(
       """SELECT o_orderstatus, count(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
         |FROM orders_v
         |WHERE o_custkey IN
         |  (SELECT c_custkey FROM customer_v WHERE c_acctbal > 9000)
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
+    finally Seq("orders_v", "customer_v").foreach(spark.catalog.dropTempView)
   }
 
   val queries: Map[String, Q] = Map(

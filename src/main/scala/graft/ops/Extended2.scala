@@ -39,10 +39,11 @@ object Extended2 {
 
   /** Explicit GROUPING SETS through the spark.sql entry point: per-segment,
     * per-nation, and grand-total aggregates of customer balances in one
-    * pass (one shuffle; the expansion is map-side). */
+    * pass (one shuffle; the expansion is map-side). The temp view is
+    * dropped once `spark.sql` has analysed the query. */
   val q54GroupingSets: Q = (spark, dir) => {
     Tables.customer(spark, dir).createOrReplaceTempView("customer_gs")
-    spark.sql(
+    try spark.sql(
       """SELECT coalesce(c_mktsegment, 'ALL') AS segment,
         |  coalesce(CAST(c_nationkey AS STRING), 'ALL') AS nation,
         |  COUNT(*) AS n_customers,
@@ -50,6 +51,7 @@ object Extended2 {
         |FROM customer_gs
         |GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
         |ORDER BY segment, nation""".stripMargin)
+    finally spark.catalog.dropTempView("customer_gs")
   }
 
   /** Regex surface (§2.10 "not used: regex" row): extract the first long

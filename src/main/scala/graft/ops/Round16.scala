@@ -810,7 +810,8 @@ object Round16 {
     * runs the join with broadcast disabled and pins the three plan
     * facts alongside the joined aggregate. */
   val q279SortedScan: Q = (spark, dir) => {
-    val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val threshKey = "spark.sql.autoBroadcastJoinThreshold"
+    val oldThresh = spark.conf.getAll.get(threshKey)
     try OpsUtil.withScratchCatalog(spark, "q279") { (cat, wh) =>
       Seq(("a", 48), ("b", 32)).foreach { case (t, n) =>
         spark.sql(
@@ -826,7 +827,7 @@ object Round16 {
         spark.sql(s"INSERT INTO $cat.$t SELECT * FROM ${cat}_src")
         spark.catalog.dropTempView(s"${cat}_src")
       }
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set(threshKey, "-1")
       val joined = spark.sql(
         s"""SELECT a.doc_id,
            |  CAST(a.n_words AS BIGINT) + b.n_words AS words2
@@ -862,7 +863,10 @@ object Round16 {
         .withColumn("shuffles", lit(exchanges))
         .withColumn("sorts", lit(sorts))
       OpsUtil.driverLiteral(out)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
+    } finally oldThresh match {
+      case Some(v) => spark.conf.set(threshKey, v)
+      case None => spark.conf.unset(threshKey)
+    }
   }
 
   // ---------------------------------------------------------------------

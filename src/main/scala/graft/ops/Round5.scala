@@ -146,17 +146,19 @@ object Round5 {
   /** Correlated LATERAL subquery — top-2 nations per region computed by a
     * per-row dependent subquery that Catalyst decorrelates into a
     * rank-filtered join (DecorrelateInnerQuery), rather than executing
-    * per outer row. The same SQL runs verbatim on DuckDB. */
+    * per outer row. The same SQL runs verbatim on DuckDB. The temp views
+    * are dropped once `spark.sql` has analysed the query. */
   val q96Lateral: Q = (spark, dir) => {
     Tables.nation(spark, dir).createOrReplaceTempView("nation_lat")
     Tables.region(spark, dir).createOrReplaceTempView("region_lat")
-    spark.sql(
+    try spark.sql(
       """SELECT r.r_name, t.n_name
         |FROM region_lat r,
         |  LATERAL (SELECT n_name FROM nation_lat n
         |           WHERE n.n_regionkey = r.r_regionkey
         |           ORDER BY n_name LIMIT 2) t
         |ORDER BY r_name, n_name""".stripMargin)
+    finally Seq("nation_lat", "region_lat").foreach(spark.catalog.dropTempView)
   }
 
   /** Time-range rolling analytics: per-priority daily revenue with a

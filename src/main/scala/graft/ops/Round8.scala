@@ -690,7 +690,9 @@ object Round8 {
     // verify session (the r7 advice). The result is 5 rollup rows, so
     // collect-and-rewrap costs nothing; the plan-shape assertions live in
     // Round8Spec against [[q136Plan]].
-    val prev = q136Confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // `getAll` holds only the keys that are set: `getOption` would
+    // return an unset key's default, and the restore would then set it
+    val prev = q136Confs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
     q136Confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val df = q136Plan(spark, dir)

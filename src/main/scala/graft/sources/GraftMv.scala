@@ -291,27 +291,80 @@ object GraftMv {
     spark.read.format("graft.sources.GraftDocsSource")
       .option("path", dir.toString)
 
-  /** CREATE MATERIALIZED VIEW: seed the aggregate at the source's
-    * current version and open the refresh ledger at that watermark.
+  /** The table at `dir` as of `version`: a lazy frame no later commit
+    * can move, whenever it executes. */
+  private def pinned(spark: SparkSession, dir: Path, version: Long)
+      : DataFrame =
+    pathReader(spark, dir).option("versionAsOf", version.toString).load()
+
+  /** The head version of a create's input table, which the seed pins. */
+  private def headVersion(table: Path, what: String): Long = {
+    val head = GraftVersions.latest(table)
+    require(head.isDefined, s"$what must be a versioned table")
+    head.get.version
+  }
+
+  /** CREATE's shared tail: make the view directory (this call owns it,
+    * so it may delete it), write the view's properties, land `seed` as
+    * the first commit with the ledger opened at `epoch`, and register
+    * the view on each of `dependsOn`'s `mv.dependents`. The group count
+    * is read off the landed manifest's row counters. An error raised
+    * while the seed executes (a fold's overflow raise, say) surfaces
+    * inside that first commit; the directory is then deleted before the
+    * error is rethrown, so the name stays free. */
+  private def createView(mv: Path, name: String,
+      props: Map[String, String], seed: DataFrame, epoch: Long,
+      dependsOn: Seq[Path]): MvInfo = {
+    try Files.createDirectory(mv)
+    catch { case _: java.nio.file.FileAlreadyExistsException =>
+      throw new IllegalArgumentException(s"mv target $mv already exists") }
+    val (info, groups) =
+      try {
+        GraftVersions.enable(mv)
+        GraftTableMeta.write(mv, props)
+        swapIn(mv, seed, "mv-create", epoch, expectWatermark = Some(None))
+          .getOrElse(throw new IllegalStateException(
+            s"fresh mv ledger at $mv already held epoch $epoch"))
+      } catch { case e: Throwable =>
+        try org.apache.commons.io.FileUtils.deleteDirectory(mv.toFile)
+        catch { case io: java.io.IOException => e.addSuppressed(io) }
+        throw e
+      }
+    // registration is a read-modify-write of each table's property
+    // file: run it under that table's commit lock so two concurrent
+    // creates on one table can't lose each other's mv.dependents entry.
+    // `.distinct` absorbs a view naming one table twice.
+    dependsOn.distinct.foreach { tbl =>
+      GraftVersions.withTableLock(tbl) {
+        val p = GraftTableMeta.read(tbl)
+        val joined = p.get("mv.dependents")
+          .map(_ + "," + name).getOrElse(name)
+        GraftTableMeta.write(tbl, p + ("mv.dependents" -> joined))
+      }
+    }
+    MvInfo(epoch, groups, applied = groups, info.version, refreshed = true)
+  }
+
+  /** CREATE MATERIALIZED VIEW: seed the aggregate from the source's
+    * live snapshot at its head version `before`, and open the refresh
+    * ledger at `before`.
     *
-    * The seed is computed from the LIVE snapshot (not the change feed,
-    * so a source whose early history was vacuumed can still seed), and
-    * races with concurrent source commits are closed optimistically:
-    * the source version is read before AND after the aggregate
-    * materializes, and a moved source re-runs the seed — the same
-    * read-validate loop OPTIMIZE uses. With `auto = true` the MV
-    * registers itself on the source's `mv.dependents` list and every
-    * subsequent source data commit pays an inline refresh
-    * ([[maybeAutoRefresh]]) — Delta autoOptimize semantics applied to
-    * view maintenance. */
+    * The seed reads the live snapshot (not the change feed, so a
+    * source whose early history was vacuumed can still seed), pinned to
+    * `before` with `versionAsOf`: a source commit landing while the
+    * seed executes cannot leak in, and the seed is exactly the source
+    * at the watermark the ledger records. Such a commit is folded by
+    * the next refresh; until then the view is not fresh, and
+    * `MvRewriteRule` does not answer live scans from it. With
+    * `auto = true` the MV registers itself on the source's
+    * `mv.dependents` list and every subsequent source data commit pays
+    * an inline refresh ([[maybeAutoRefresh]]) — Delta autoOptimize
+    * semantics applied to view maintenance. */
   def create(spark: SparkSession, srcName: String, src: Path, mv: Path,
       name: String, keyExpr: String, sumExpr: String,
       auto: Boolean = false, agg: String = "sum",
-      key2Expr: Option[String] = None, maxAttempts: Int = 3): MvInfo = {
-    require(GraftVersions.latest(src).isDefined,
-      s"mv source $src must be a versioned table (the change feed is " +
-        "the refresh input)")
-    require(!Files.exists(mv), s"mv target $mv already exists")
+      key2Expr: Option[String] = None): MvInfo = {
+    val before = headVersion(src, s"mv source $src")
     require(AggKinds(agg),
       s"mv aggregate kind '$agg' not supported (have: " +
         s"${AggKinds.mkString(", ")})")
@@ -335,10 +388,9 @@ object GraftMv {
     val composite = key2Expr.isDefined
     require(!composite || agg == "sum",
       "composite-key views support agg='sum' only")
-    val before = GraftVersions.latest(src).get.version
     // seed from the live snapshot: every live row enters the view
     val kc = keyCols(composite)
-    val base = pathReader(spark, src).load()
+    val base = pinned(spark, src, before)
       .select(keySelect(keyExpr, key2Expr) :+
         sumCol(sumExpr, sumScale).as("s"): _*)
     val seed = finalizeRows(name, composite,
@@ -348,42 +400,12 @@ object GraftMv {
       else
         base.groupBy(kc.head, kc.tail: _*)
           .agg(extremum(agg)(col("s")).as("s"), count(lit(1)).as("c")))
-      .cache()
-    val groups = seed.count()
-    val after = GraftVersions.latest(src).get.version
-    if (after != before) {
-      seed.unpersist()
-      require(maxAttempts > 1,
-        s"mv create raced source commits $maxAttempts times; giving up")
-      return create(spark, srcName, src, mv, name, keyExpr, sumExpr,
-        auto, agg, key2Expr, maxAttempts - 1)
-    }
-    Files.createDirectories(mv)
-    GraftVersions.enable(mv)
-    GraftTableMeta.write(mv, Map(
+    createView(mv, name, Map(
       "mv.name" -> name, "mv.source" -> srcName,
       "mv.key" -> keyExpr, "mv.sum" -> sumExpr, "mv.agg" -> agg) ++
       key2Expr.map("mv.key2" -> _).toMap ++
-      sumScale.map(s => "mv.sum.scale" -> s.toString).toMap)
-    val (info, _) = swapIn(mv, seed, "mv-create", epoch = before,
-      expectWatermark = Some(None))
-      .getOrElse(throw new IllegalStateException(
-        s"fresh mv ledger at $mv already held epoch $before"))
-    seed.unpersist()
-    if (auto) {
-      // registration is a read-modify-write of the SOURCE's property
-      // file: run it under the source's commit lock so two concurrent
-      // create_mv(auto=true) on the same source can't lose each
-      // other's mv.dependents entry (r16 ADVICE low)
-      GraftVersions.withTableLock(src) {
-        val props = GraftTableMeta.read(src)
-        val joined = props.get("mv.dependents")
-          .map(_ + "," + name).getOrElse(name)
-        GraftTableMeta.write(src, props + ("mv.dependents" -> joined))
-      }
-    }
-    MvInfo(before, groups, applied = groups, info.version,
-      refreshed = true)
+      sumScale.map(s => "mv.sum.scale" -> s.toString).toMap,
+      seed, before, if (auto) Seq(src) else Nil)
   }
 
   /** REFRESH: fold the source commits since the recorded watermark
@@ -395,17 +417,58 @@ object GraftMv {
     * leak in; the next refresh picks it up), signed-folded together
     * with the current MV rows, and swapped in under `txn = (appId,
     * S)`. A replayed refresh (crash recovery, two racing callers)
-    * finds the ledger already at S and lands nothing. A source
-    * vacuumed past W+1 fails loudly on the feed read (the expired-
-    * range guard) rather than silently skipping deltas — re-create
-    * the MV in that case. */
+    * finds the ledger already at S and lands nothing; one that loses
+    * the watermark CAS to a racer re-plans from the new watermark, up
+    * to `maxAttempts` times. A source vacuumed past W+1 fails loudly
+    * on the feed read (the expired-range guard) rather than silently
+    * skipping deltas — re-create the MV in that case. */
   def refresh(spark: SparkSession, mv: Path,
       resolveSource: String => Path, maxAttempts: Int = 3): MvInfo = {
     val props = GraftTableMeta.read(mv)
-    val name = props.getOrElse("mv.name", throw new IllegalStateException(
-      s"$mv is not a materialized view (no mv.name property)"))
-    if (props.contains("mv.dim") || props.contains("mv.dims"))
-      return refreshJoin(spark, mv, resolveSource, maxAttempts)
+    if (!props.contains("mv.name")) throw new IllegalStateException(
+      s"$mv is not a materialized view (no mv.name property)")
+    try
+      if (props.contains("mv.dim") || props.contains("mv.dims"))
+        refreshJoin(spark, mv, props, resolveSource)
+      else refreshAgg(spark, mv, props, resolveSource)
+    catch {
+      case _: GraftVersions.ConcurrentCommitException if maxAttempts > 1 =>
+        refresh(spark, mv, resolveSource, maxAttempts - 1)
+    }
+  }
+
+  /** The view's live group count, off its manifest's row counters. */
+  private def liveGroups(mv: Path): Long = GraftVersions.latest(mv)
+    .map(_.entries.flatMap(_.liveRows).sum).getOrElse(0L)
+
+  /** The change feed of `src` over (w, s]. */
+  private def changeFeed(spark: SparkSession, src: Path, w: Long, s: Long)
+      : DataFrame =
+    pathReader(spark, src)
+      .option("readChangeFeed", "true")
+      .option("startingVersion", (w + 1).toString)
+      .option("endingVersion", s.toString).load()
+
+  /** A delta range (w, s] that held only no-row commits (pruned
+    * eq-deletes, empty epochs) advances the watermark as a METADATA-only
+    * commit — keep every file, ledger the new epoch, write no data. The
+    * CAS still applies: "keep every file" is only right if no racer
+    * replaced the file set after W was read. */
+  private def advanceWatermark(mv: Path, w: Long, s: Long,
+      mvVersion: Long): MvInfo =
+    GraftVersions.commitTxn(mv, "mv-refresh",
+      removed = Some(Set.empty), added = Nil, appId = AppId,
+      epoch = s, expectLastEpoch = Some(Some(w))) match {
+      case Some(info) =>
+        MvInfo(s, liveGroups(mv), applied = 0L, info.version,
+          refreshed = true)
+      case None => replayedInfo(mv, s, mvVersion)
+    }
+
+  /** The single-table (GROUP BY over one source) refresh. */
+  private def refreshAgg(spark: SparkSession, mv: Path,
+      props: Map[String, String], resolveSource: String => Path): MvInfo = {
+    val name = props("mv.name")
     val src = resolveSource(props("mv.source"))
     val keyExpr = props("mv.key"); val sumExpr = props("mv.sum")
     val key2Expr = props.get("mv.key2")
@@ -428,45 +491,17 @@ object GraftMv {
     val s = GraftVersions.latest(src).map(_.version)
       .getOrElse(throw new IllegalStateException(
         s"mv source $src is no longer a versioned table"))
-    def liveGroups: Long = GraftVersions.latest(mv)
-      .map(_.entries.flatMap(_.liveRows).sum).getOrElse(0L)
-    def retryOnRace(e: GraftVersions.ConcurrentCommitException): MvInfo = {
-      if (maxAttempts <= 1) throw e
-      refresh(spark, mv, resolveSource, maxAttempts - 1)
-    }
     if (s <= w)
-      return MvInfo(w, liveGroups, applied = 0L, mvVersion,
+      return MvInfo(w, liveGroups(mv), applied = 0L, mvVersion,
         refreshed = false)
-    val changes = pathReader(spark, src)
-      .option("readChangeFeed", "true")
-      .option("startingVersion", (w + 1).toString)
-      .option("endingVersion", s.toString).load()
+    val changes = changeFeed(spark, src, w, s)
     val applied = changes.count()
-    if (applied == 0L) {
-      // the range held only no-row commits (pruned eq-deletes, empty
-      // epochs): advance the watermark as a METADATA-only commit —
-      // keep every file, ledger the new epoch, write no data. The CAS
-      // still applies: "keep every file" is only right if no racer
-      // replaced the file set after we read W.
-      val v =
-        try GraftVersions.commitTxn(mv, "mv-refresh",
-          removed = Some(Set.empty), added = Nil, appId = AppId,
-          epoch = s, expectLastEpoch = Some(Some(w)))
-        catch { case e: GraftVersions.ConcurrentCommitException =>
-          return retryOnRace(e) }
-      return v match {
-        case Some(info) =>
-          MvInfo(s, liveGroups, applied = 0L, info.version,
-            refreshed = true)
-        case None => replayedInfo(mv, s, mvVersion, liveGroups)
-      }
-    }
+    if (applied == 0L) return advanceWatermark(mv, w, s, mvVersion)
     // current state PINNED to the snapshot observed with W: the frame
     // is lazy and executes inside swapIn's write job — an unpinned
     // read would see whatever state a racing refresh lands in between,
     // double-applying its delta range even though W was read first
-    val current = pathReader(spark, mv)
-      .option("versionAsOf", mvVersion.toString).load()
+    val current = pinned(spark, mv, mvVersion)
       .select(Seq(col("doc_id").as("k")) ++
         (if (composite) Seq(col("title").cast("long").as("k2"))
          else Nil) ++ Seq(col("fp").as("s"),
@@ -499,8 +534,7 @@ object GraftMv {
           .join(affected, Seq("k"), "left_anti")
           .groupBy("k")
           .agg(extremum(aggKind)(col("s")).as("s"), sum("c").as("c"))
-        val recomputed = pathReader(spark, src)
-          .option("versionAsOf", s.toString).load()
+        val recomputed = pinned(spark, src, s)
           .select(guarded(expr(keyExpr).cast("long"), "key").as("k"),
             guarded(expr(sumExpr).cast("long"), "sum").as("s"))
           .join(affected, Seq("k"), "left_semi")
@@ -510,17 +544,13 @@ object GraftMv {
           unaffected.unionByName(recomputed)),
           nAffected)
       }
-    val swapped =
-      try swapIn(mv, refreshed, "mv-refresh", epoch = s,
-        expectWatermark = Some(Some(w)))
-      catch { case e: GraftVersions.ConcurrentCommitException =>
-        return retryOnRace(e) }
-    swapped match {
+    swapIn(mv, refreshed, "mv-refresh", epoch = s,
+      expectWatermark = Some(Some(w))) match {
       case Some((info, groups)) =>
         MvInfo(s, groups, applied, info.version, refreshed = true,
           recomputed = nRecomputed)
       case None => // replayed epoch: the ledger moved under us
-        replayedInfo(mv, s, mvVersion, liveGroups)
+        replayedInfo(mv, s, mvVersion)
     }
   }
 
@@ -531,13 +561,13 @@ object GraftMv {
     * reporting our stale `s` would pair a lagging watermark with the
     * racer's newer state (r17 ADVICE). The lock makes the re-read pair
     * coherent. */
-  private def replayedInfo(mv: Path, epoch: Long, seenVersion: Long,
-      liveGroups: => Long): MvInfo = {
+  private def replayedInfo(mv: Path, epoch: Long, seenVersion: Long)
+      : MvInfo = {
     val (w2, v2) = GraftVersions.withTableLock(mv) {
       (GraftVersions.lastTxnEpoch(mv, AppId).getOrElse(epoch),
         GraftVersions.latest(mv).map(_.version).getOrElse(seenVersion))
     }
-    MvInfo(w2, liveGroups, applied = 0L, v2, refreshed = false)
+    MvInfo(w2, liveGroups(mv), applied = 0L, v2, refreshed = false)
   }
 
   // ------------------------------------------------------------------
@@ -623,6 +653,17 @@ object GraftMv {
     when(col("_change_type").isin("insert", "update_postimage"), 1L)
       .otherwise(-1L)
 
+  /** A join view's full state at one pinned tuple (fact@fv ⋈ each
+    * dim@its version): the seed of a create and the recompute of a
+    * reseed. */
+  private def joinSeed(spark: SparkSession, name: String, fact: Path,
+      fv: Long, dims: Seq[(Path, Long)], aliases: Seq[String],
+      conds: Seq[(String, String)], keyExpr: String, sumExpr: String)
+      : DataFrame =
+    fold(name, joinedRows(pinned(spark, fact, fv),
+      dims.map { case (p, v) => pinned(spark, p, v) },
+      aliases, conds, keyExpr, sumExpr, lit(1L)))
+
   /** CREATE a JOIN MATERIALIZED VIEW (the SPJG class — the league
     * table's aggregate-over-join shape): maintains
     *
@@ -632,15 +673,22 @@ object GraftMv {
     *   GROUP BY <key>
     *
     * with all four expressions f./d.-qualified SQL over the base
-    * columns. Maintenance contract: FACT deltas fold incrementally
+    * columns. The seed is the join of the fact at its head version
+    * `fBefore` with the dim at its head version `dBefore`, both pinned
+    * with `versionAsOf`; the ledger opens at `fBefore` and the dim
+    * watermark at `dBefore`. Commits landing on either side after that
+    * are folded (fact) or reseeded (dim) by the next refresh; until
+    * then `MvRewriteRule` refuses the view as not fresh. Maintenance
+    * contract: FACT deltas fold incrementally
     * (the fact CDF slice inner-joined to the dim state the view was
     * built against — cost ∝ fact delta); any DIM movement triggers a
     * full RESEED at the next refresh (a dim row can rewrite every
     * joined row it touches — loud via `MvInfo.recomputed`, never
     * silently wrong). With `auto = true` the view registers on BOTH
     * tables' `mv.dependents`, so fact commits pay the fold and dim
-    * commits pay the reseed inline — no stale window on either axis.
-    * The fact watermark rides the txn ledger; the
+    * commits pay the reseed inline — without the dim-side entry a
+    * dim-heavy workload would lose the rewrite until the next fact
+    * commit. The fact watermark rides the txn ledger; the
     * dim watermark rides the `mv.dim.watermark` property, written
     * only AFTER its state commits (a crash between the two leaves the
     * property stale → the next refresh reseeds again: wasteful, not
@@ -648,61 +696,22 @@ object GraftMv {
   def createJoin(spark: SparkSession, factName: String, fact: Path,
       dimName: String, dim: Path, mv: Path, name: String,
       factKey: String, dimKey: String, keyExpr: String, sumExpr: String,
-      auto: Boolean = false, maxAttempts: Int = 3): MvInfo = {
-    require(GraftVersions.latest(fact).isDefined,
-      s"join-mv fact $fact must be a versioned table")
-    require(GraftVersions.latest(dim).isDefined,
-      s"join-mv dim $dim must be a versioned table")
-    require(!Files.exists(mv), s"mv target $mv already exists")
+      auto: Boolean = false): MvInfo = {
+    val fBefore = headVersion(fact, s"join-mv fact $fact")
+    val dBefore = headVersion(dim, s"join-mv dim $dim")
     Seq("fact-key" -> factKey, "dim-key" -> dimKey, "key" -> keyExpr,
       "sum" -> sumExpr).foreach { case (what, sql) =>
       rejectNonMaintainable(sql)
       validatedJoin(spark, what, sql, Seq("f", "d"))
     }
-    val fBefore = GraftVersions.latest(fact).get.version
-    val dBefore = GraftVersions.latest(dim).get.version
-    val seed = fold(name, joinedRows(
-      pathReader(spark, fact).load(), Seq(pathReader(spark, dim).load()),
-      Seq("d"), Seq((factKey, dimKey)), keyExpr, sumExpr, lit(1L)))
-      .cache()
-    val groups = seed.count()
-    val moved = GraftVersions.latest(fact).get.version != fBefore ||
-      GraftVersions.latest(dim).get.version != dBefore
-    if (moved) {
-      seed.unpersist()
-      require(maxAttempts > 1,
-        s"join-mv create raced source commits; giving up")
-      return createJoin(spark, factName, fact, dimName, dim, mv, name,
-        factKey, dimKey, keyExpr, sumExpr, auto, maxAttempts - 1)
-    }
-    Files.createDirectories(mv)
-    GraftVersions.enable(mv)
-    GraftTableMeta.write(mv, Map(
+    createView(mv, name, Map(
       "mv.name" -> name, "mv.source" -> factName, "mv.dim" -> dimName,
       "mv.factkey" -> factKey, "mv.dimkey" -> dimKey,
       "mv.key" -> keyExpr, "mv.sum" -> sumExpr,
-      "mv.dim.watermark" -> dBefore.toString))
-    val (info, _) = swapIn(mv, seed, "mv-create", epoch = fBefore,
-      expectWatermark = Some(None))
-      .getOrElse(throw new IllegalStateException(
-        s"fresh mv ledger at $mv already held epoch $fBefore"))
-    seed.unpersist()
-    // register on BOTH sides' dependents: a fact commit pays the
-    // incremental fold, and a DIM commit pays the reseed inline —
-    // without the dim-side entry a dim-heavy workload would lose the
-    // rewrite indefinitely (the view stays honest-stale until the
-    // next fact commit). `.distinct` on the read side absorbs a
-    // self-join view registering twice on one table.
-    if (auto) Seq(fact, dim).distinct.foreach { tbl =>
-      GraftVersions.withTableLock(tbl) {
-        val p = GraftTableMeta.read(tbl)
-        val joined = p.get("mv.dependents")
-          .map(_ + "," + name).getOrElse(name)
-        GraftTableMeta.write(tbl, p + ("mv.dependents" -> joined))
-      }
-    }
-    MvInfo(fBefore, groups, applied = groups, info.version,
-      refreshed = true)
+      "mv.dim.watermark" -> dBefore.toString),
+      joinSeed(spark, name, fact, fBefore, Seq(dim -> dBefore), Seq("d"),
+        Seq((factKey, dimKey)), keyExpr, sumExpr),
+      fBefore, if (auto) Seq(fact, dim) else Nil)
   }
 
   /** CREATE a CHAIN JOIN MATERIALIZED VIEW: the N-dim generalization
@@ -717,27 +726,27 @@ object GraftMv {
     * fact⋈dim⋈dim — the reference's full league-table shape,
     * orders⋈customer⋈nation, Assignment-python.py:183-185 → :257).
     * Condition i may reference f and any EARLIER dim (validated
-    * against the prefix). Fact deltas fold incrementally against ALL
-    * pinned dims; movement of ANY dim reseeds. `auto = true`
-    * registers on the fact and every dim. Role-playing dims (one
-    * table joined twice) are rejected — the rewrite's name-keyed
-    * side matching cannot disambiguate them. */
+    * against the prefix). As in [[createJoin]], the seed joins every
+    * side pinned at its head version; the ledger opens at the fact's
+    * and each `mv.dim.<i>.watermark` at its dim's, and later commits
+    * are left to the next refresh. Fact deltas fold incrementally
+    * against ALL pinned dims; movement of ANY dim reseeds.
+    * `auto = true` registers on the fact and every dim. Role-playing
+    * dims (one table joined twice) are rejected — the rewrite's
+    * name-keyed side matching cannot disambiguate them. */
   def createChain(spark: SparkSession, factName: String, fact: Path,
       dims: Seq[(String, Path)], conds: Seq[(String, String)],
       mv: Path, name: String, keyExpr: String, sumExpr: String,
-      auto: Boolean = false, maxAttempts: Int = 3): MvInfo = {
+      auto: Boolean = false): MvInfo = {
     require(dims.nonEmpty && dims.size == conds.size,
       "createChain needs one join condition per dim")
     require((factName +: dims.map(_._1)).distinct.size == dims.size + 1,
       "chain-mv sides must be distinct tables (role-playing dims are " +
         "not supported)")
-    require(GraftVersions.latest(fact).isDefined,
-      s"chain-mv fact $fact must be a versioned table")
-    dims.foreach { case (n, p) =>
-      require(GraftVersions.latest(p).isDefined,
-        s"chain-mv dim $n ($p) must be a versioned table")
+    val fBefore = headVersion(fact, s"chain-mv fact $fact")
+    val dBefore = dims.map { case (n, p) =>
+      headVersion(p, s"chain-mv dim $n ($p)")
     }
-    require(!Files.exists(mv), s"mv target $mv already exists")
     val aliases = dims.indices.map(i => s"d${i + 1}")
     conds.zipWithIndex.foreach { case ((l, r), i) =>
       rejectNonMaintainable(l); rejectNonMaintainable(r)
@@ -749,25 +758,7 @@ object GraftMv {
       rejectNonMaintainable(sql)
       validatedJoin(spark, what, sql, "f" +: aliases)
     }
-    val fBefore = GraftVersions.latest(fact).get.version
-    val dBefore = dims.map(d => GraftVersions.latest(d._2).get.version)
-    val seed = fold(name, joinedRows(
-      pathReader(spark, fact).load(),
-      dims.map(d => pathReader(spark, d._2).load()),
-      aliases, conds, keyExpr, sumExpr, lit(1L))).cache()
-    val groups = seed.count()
-    val moved = GraftVersions.latest(fact).get.version != fBefore ||
-      dims.map(d => GraftVersions.latest(d._2).get.version) != dBefore
-    if (moved) {
-      seed.unpersist()
-      require(maxAttempts > 1,
-        s"chain-mv create raced source commits; giving up")
-      return createChain(spark, factName, fact, dims, conds, mv, name,
-        keyExpr, sumExpr, auto, maxAttempts - 1)
-    }
-    Files.createDirectories(mv)
-    GraftVersions.enable(mv)
-    GraftTableMeta.write(mv, Map(
+    createView(mv, name, Map(
       "mv.name" -> name, "mv.source" -> factName,
       "mv.dims" -> dims.map(_._1).mkString(","),
       "mv.key" -> keyExpr, "mv.sum" -> sumExpr) ++
@@ -775,22 +766,10 @@ object GraftMv {
         s"mv.join.${i + 1}.left" -> l, s"mv.join.${i + 1}.right" -> r)
       }.toMap ++
       dims.indices.map(i =>
-        s"mv.dim.${i + 1}.watermark" -> dBefore(i).toString).toMap)
-    val (info, _) = swapIn(mv, seed, "mv-create", epoch = fBefore,
-      expectWatermark = Some(None))
-      .getOrElse(throw new IllegalStateException(
-        s"fresh mv ledger at $mv already held epoch $fBefore"))
-    seed.unpersist()
-    if (auto) (fact +: dims.map(_._2)).distinct.foreach { tbl =>
-      GraftVersions.withTableLock(tbl) {
-        val p = GraftTableMeta.read(tbl)
-        val joined = p.get("mv.dependents")
-          .map(_ + "," + name).getOrElse(name)
-        GraftTableMeta.write(tbl, p + ("mv.dependents" -> joined))
-      }
-    }
-    MvInfo(fBefore, groups, applied = groups, info.version,
-      refreshed = true)
+        s"mv.dim.${i + 1}.watermark" -> dBefore(i).toString).toMap,
+      joinSeed(spark, name, fact, fBefore, dims.map(_._2).zip(dBefore),
+        aliases, conds, keyExpr, sumExpr),
+      fBefore, if (auto) fact +: dims.map(_._2) else Nil)
   }
 
   /** REFRESH a join view (legacy two-table or N-dim chain — one code
@@ -802,8 +781,8 @@ object GraftMv {
     * reads the CDF, so a vacuumed fact range cannot fail it) — and
     * `recomputed` carries the work (= the reseeded group count). */
   private def refreshJoin(spark: SparkSession, mv: Path,
-      resolveSource: String => Path, maxAttempts: Int): MvInfo = {
-    val props0 = GraftTableMeta.read(mv)
+      props0: Map[String, String], resolveSource: String => Path)
+      : MvInfo = {
     val name = props0("mv.name")
     val spec = joinViewSpec(props0).getOrElse(
       throw new IllegalStateException(s"$mv is not a join view"))
@@ -829,36 +808,23 @@ object GraftMv {
         .getOrElse(throw new IllegalStateException(
           s"join-mv dim $n ($p) is no longer a versioned table"))
     }
-    def liveGroups: Long = GraftVersions.latest(mv)
-      .map(_.entries.flatMap(_.liveRows).sum).getOrElse(0L)
-    def retryOnRace(e: GraftVersions.ConcurrentCommitException): MvInfo = {
-      if (maxAttempts <= 1) throw e
-      refreshJoin(spark, mv, resolveSource, maxAttempts - 1)
-    }
     if (dvs != dimWs) {
       // RESEED: a dim moved — recompute the whole view from the
       // PINNED tuple (fact@s ⋈ dims@dvs). s may equal w (a dim-only
       // change): then the txn ledger stays put and the swap commits
       // through the plain optimistic path instead.
-      val rows = fold(name, joinedRows(
-        pathReader(spark, fact).option("versionAsOf", s.toString).load(),
-        dimPaths.zip(dvs).map { case (p, dv) =>
-          pathReader(spark, p).option("versionAsOf", dv.toString).load()
-        },
-        spec.aliases, spec.conds, keyExpr, sumExpr, lit(1L)))
+      val rows = joinSeed(spark, name, fact, s, dimPaths.zip(dvs),
+        spec.aliases, spec.conds, keyExpr, sumExpr)
       val committed =
-        try {
-          if (s > w) swapIn(mv, rows, "mv-reseed", epoch = s,
-            expectWatermark = Some(Some(w)))
-          else {
-            val landed = stageRows(mv, rows)
-            Some((GraftVersions.advance(mv, "mv-reseed",
-              removed = None, added = landed,
-              readVersion = Some(mvVersion)),
-              landed.flatMap(_.rows).sum))
-          }
-        } catch { case e: GraftVersions.ConcurrentCommitException =>
-          return retryOnRace(e) }
+        if (s > w) swapIn(mv, rows, "mv-reseed", epoch = s,
+          expectWatermark = Some(Some(w)))
+        else {
+          val landed = stageRows(mv, rows)
+          Some((GraftVersions.advance(mv, "mv-reseed",
+            removed = None, added = landed,
+            readVersion = Some(mvVersion)),
+            landed.flatMap(_.rows).sum))
+        }
       committed match {
         case Some((info, groups)) =>
           GraftVersions.withTableLock(mv) {
@@ -869,49 +835,26 @@ object GraftMv {
           }
           MvInfo(s, groups, applied = 0L, info.version,
             refreshed = true, recomputed = groups)
-        case None => replayedInfo(mv, s, mvVersion, liveGroups)
+        case None => replayedInfo(mv, s, mvVersion)
       }
     } else if (s <= w) {
-      MvInfo(w, liveGroups, applied = 0L, mvVersion, refreshed = false)
+      MvInfo(w, liveGroups(mv), applied = 0L, mvVersion, refreshed = false)
     } else {
-      val changes = pathReader(spark, fact)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", (w + 1).toString)
-        .option("endingVersion", s.toString).load()
+      val changes = changeFeed(spark, fact, w, s)
       val applied = changes.count()
-      if (applied == 0L) {
-        val v =
-          try GraftVersions.commitTxn(mv, "mv-refresh",
-            removed = Some(Set.empty), added = Nil, appId = AppId,
-            epoch = s, expectLastEpoch = Some(Some(w)))
-          catch { case e: GraftVersions.ConcurrentCommitException =>
-            return retryOnRace(e) }
-        return v match {
-          case Some(info) =>
-            MvInfo(s, liveGroups, applied = 0L, info.version,
-              refreshed = true)
-          case None => replayedInfo(mv, s, mvVersion, liveGroups)
-        }
-      }
-      val current = pathReader(spark, mv)
-        .option("versionAsOf", mvVersion.toString).load()
+      if (applied == 0L) return advanceWatermark(mv, w, s, mvVersion)
+      val current = pinned(spark, mv, mvVersion)
         .select(col("doc_id").as("k"), col("fp").as("s"),
           col("n_words").cast("long").as("c"))
       val deltas = joinedRows(changes,
-        dimPaths.zip(dimWs).map { case (p, dw) =>
-          pathReader(spark, p).option("versionAsOf", dw.toString).load()
-        },
+        dimPaths.zip(dimWs).map { case (p, dw) => pinned(spark, p, dw) },
         spec.aliases, spec.conds, keyExpr, sumExpr, cdfSign)
       val refreshed = fold(name, current.unionByName(deltas))
-      val swapped =
-        try swapIn(mv, refreshed, "mv-refresh", epoch = s,
-          expectWatermark = Some(Some(w)))
-        catch { case e: GraftVersions.ConcurrentCommitException =>
-          return retryOnRace(e) }
-      swapped match {
+      swapIn(mv, refreshed, "mv-refresh", epoch = s,
+        expectWatermark = Some(Some(w))) match {
         case Some((info, groups)) =>
           MvInfo(s, groups, applied, info.version, refreshed = true)
-        case None => replayedInfo(mv, s, mvVersion, liveGroups)
+        case None => replayedInfo(mv, s, mvVersion)
       }
     }
   }

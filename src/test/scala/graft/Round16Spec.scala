@@ -1444,6 +1444,56 @@ class Round16Spec extends SparkSpec {
     }
   }
 
+  test("mv: create_mv(auto=true) racing single-row committers never " +
+      "throws, and one catch-up refresh reaches the source head") {
+    OpsUtil.withScratchCatalog(spark, "r16_mv8") { (cat, wh) =>
+      mvFixture(cat)
+      insertRange(cat, "t", 0, 8)
+      // each round creates one view while 4 committers each land one
+      // row; the seed is pinned to the version the create read, so no
+      // interleaving can make the create fail, and commits it did not
+      // see are left to the next refresh
+      (0 until 3).foreach { round =>
+        val view = s"v$round"
+        val errs =
+          new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        val start = new java.util.concurrent.CountDownLatch(1)
+        def task(body: => Unit): Runnable = new Runnable {
+          override def run(): Unit =
+            try { start.await(); body }
+            catch { case t: Throwable => errs.add(t) }
+        }
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+        try {
+          val futures = (task {
+            spark.sql(s"CALL $cat.system.create_mv(" +
+              s"'$view', 't', 'doc_id % 5', 'n_words', true)").collect()
+          } +: (0 until 4).map { w =>
+            val id = 100 + round * 10 + w
+            task {
+              spark.sql(s"INSERT INTO $cat.t VALUES " +
+                s"($id, 'd$id', $id, ${id % 7})")
+            }
+          }).map(pool.submit(_))
+          start.countDown()
+          futures.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+        } finally pool.shutdown()
+        locally {
+          import scala.jdk.CollectionConverters._
+          assert(errs.isEmpty,
+            s"round $round: create and committers must never fail: " +
+              errs.asScala.toSeq)
+        }
+        spark.sql(s"CALL $cat.system.refresh_mv('$view')").collect()
+        assert(mvRows(cat, view) == fullRecompute(cat), s"round $round")
+        assert(GraftVersions.lastTxnEpoch(wh.resolve(view),
+          graft.sources.GraftMv.AppId).get ==
+          GraftVersions.latest(wh.resolve("t")).get.version,
+          s"round $round: the watermark must end at the source head")
+      }
+    }
+  }
+
   test("mv audits q282 and q285 compare the view with a rule-off side " +
       "that scans the source table") {
     // each query fixes its rule-off plans before restoring the rewrite,

@@ -207,6 +207,13 @@ class Round18Spec extends SparkSpec {
         .mkString(" | ")
       assert(chain.contains("overflow"),
         s"expected an overflow raise, got: $chain")
+      // the failed create leaves no view directory behind, so the name
+      // is free for a valid view
+      assert(!java.nio.file.Files.exists(wh.resolve("vover")),
+        "a create whose seed raises must leave no view directory")
+      val valid = spark.sql(s"CALL $cat.system.create_mv('vover', 't', " +
+        "'doc_id % 1', 'CAST(n_words AS DECIMAL(18,0))', false)").head()
+      assert(valid.getLong(1) == 1L, "doc_id % 1 has one group")
     }
   }
 

@@ -345,11 +345,25 @@ class Round8Spec extends SparkSpec {
 
   test("q136 leaves the instantiated catalogs and the conf as it found them") {
     import org.apache.spark.sql.GraftBridge
-    val before = (GraftBridge.instantiatedCatalogs(spark), spark.conf.getAll)
-    assert(ops.Round8.q136StoragePartitionedJoin(spark, sf).collect().length == 5)
-    assert(GraftBridge.instantiatedCatalogs(spark) == before._1,
-      (GraftBridge.instantiatedCatalogs(spark) -- before._1).mkString(", "))
-    assert(spark.conf.getAll == before._2)
+    def check(): Unit = {
+      val before = (GraftBridge.instantiatedCatalogs(spark), spark.conf.getAll)
+      assert(ops.Round8.q136StoragePartitionedJoin(spark, sf).collect().length == 5)
+      assert(GraftBridge.instantiatedCatalogs(spark) == before._1,
+        (GraftBridge.instantiatedCatalogs(spark) -- before._1).mkString(", "))
+      assert(spark.conf.getAll == before._2)
+    }
+    check()
+    // with both keys unset first, the query must unset them again rather
+    // than write their defaults back
+    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
+      "spark.sql.catalog.graft_cat")
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    keys.foreach(spark.conf.unset)
+    try check()
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   test("q129: transition count conserves events minus journeys") {
