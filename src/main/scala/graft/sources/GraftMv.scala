@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -233,59 +233,36 @@ object GraftMv {
       : DataFrame =
     finalizeRows(name, composite, summed(deltas, composite, decimalSum))
 
-  /** Materialize `rows` as data files INSIDE `root` (not yet
-    * committed): written through a VERSIONED scratch dir (with the
-    * MV's quality properties mirrored in) so per-file stats/blooms
-    * ride into the final manifest — same pattern as the OPTIMIZE
-    * rewrite. Files a failed commit leaves behind are unreferenced
-    * and vacuum reclaims them — exactly the compact crash story. */
-  private def stageRows(root: Path, rows: DataFrame)
-      : Seq[GraftVersions.FileEntry] = {
-    val tmp = Files.createTempDirectory(root, "_mv")
-    try {
-      GraftVersions.enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
-      rows.coalesce(1).sortWithinPartitions("doc_id")
-        .write.format("graft.sources.GraftDocsSource")
-        .option("path", tmp.toString).mode("append").save()
-      val staged = GraftVersions.latest(tmp).map(_.entries).getOrElse(Nil)
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        e.copy(name = name)
-      }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      catch { case _: java.io.IOException => () }
-    }
+  /** Land `rows` as the MV's new live snapshot — one file, sorted on
+    * the key — in ONE replace-all commit that `commit` makes from the
+    * staged entries ([[GraftVersions.stageRewrite]]); returns the commit
+    * plus the landed group count (read off the manifest's own row
+    * counters — no extra job), or None when `commit` lands nothing (a
+    * replayed refresh). */
+  private def swapIn(root: Path, rows: DataFrame)(
+      commit: Seq[GraftVersions.FileEntry] => Option[GraftVersions.VersionInfo])
+      : Option[(GraftVersions.VersionInfo, Long)] = {
+    val landed = GraftVersions.stageRewrite(root,
+      rows.coalesce(1).sortWithinPartitions("doc_id"))
+    commit(landed).map(v => (v, landed.flatMap(_.rows).sum))
   }
 
-  /** Land `rows` as the MV's new live snapshot in ONE commit tagged
-    * with the source watermark; returns the commit plus the landed
-    * group count (read off the manifest's own row counters — no extra
-    * job). Returns None when the ledger already holds `epoch` (a
-    * replayed refresh). */
-  private def swapIn(root: Path, rows: DataFrame, op: String,
-      epoch: Long, expectWatermark: Option[Option[Long]])
-      : Option[(GraftVersions.VersionInfo, Long)] = {
-    val landed = stageRows(root, rows)
-    // REPLACE-ALL (removed = None) under a WATERMARK CAS: each
-    // refresh lands the COMPLETE view state for its epoch, computed
-    // from (state-at-watermark-W + deltas (W, epoch]). That is only
-    // the complete state if W is STILL the ledger head when the
-    // commit lands — a racing refresh that moved the watermark in
-    // between already folded part of our delta range, and replacing
-    // its state with ours would double-apply that range (r16 ADVICE
-    // high). `expectLastEpoch` makes commitTxn reject exactly that
-    // interleaving (ConcurrentCommitException → caller re-plans);
-    // epoch idempotence still absorbs true replays of the same range.
-    GraftVersions.commitTxn(root, op,
-      removed = None, added = landed,
+  /** The commit of a swap that moves the watermark to `epoch`:
+    * REPLACE-ALL (removed = None) under a WATERMARK CAS. Each refresh
+    * lands the COMPLETE view state for its epoch, computed from
+    * (state-at-watermark-W + deltas (W, epoch]). That is only the
+    * complete state if W is STILL the ledger head when the commit lands
+    * — a racing refresh that moved the watermark in between already
+    * folded part of our delta range, and replacing its state with ours
+    * would double-apply that range. `expectWatermark` makes commitTxn
+    * reject exactly that interleaving (ConcurrentCommitException →
+    * [[refresh]] re-plans); epoch idempotence still absorbs true
+    * replays of the same range. */
+  private def ledgered(root: Path, op: String, epoch: Long,
+      expectWatermark: Option[Option[Long]])(
+      added: Seq[GraftVersions.FileEntry]): Option[GraftVersions.VersionInfo] =
+    GraftVersions.commitTxn(root, op, removed = None, added = added,
       appId = AppId, epoch = epoch, expectLastEpoch = expectWatermark)
-      .map(v => (v, landed.flatMap(_.rows).sum))
-  }
 
   private def pathReader(spark: SparkSession, dir: Path) =
     spark.read.format("graft.sources.GraftDocsSource")
@@ -322,7 +299,8 @@ object GraftMv {
       try {
         GraftVersions.enable(mv)
         GraftTableMeta.write(mv, props)
-        swapIn(mv, seed, "mv-create", epoch, expectWatermark = Some(None))
+        swapIn(mv, seed)(ledgered(mv, "mv-create", epoch,
+          expectWatermark = Some(None)))
           .getOrElse(throw new IllegalStateException(
             s"fresh mv ledger at $mv already held epoch $epoch"))
       } catch { case e: Throwable =>
@@ -418,24 +396,21 @@ object GraftMv {
     * with the current MV rows, and swapped in under `txn = (appId,
     * S)`. A replayed refresh (crash recovery, two racing callers)
     * finds the ledger already at S and lands nothing; one that loses
-    * the watermark CAS to a racer re-plans from the new watermark, up
-    * to `maxAttempts` times. A source vacuumed past W+1 fails loudly
-    * on the feed read (the expired-range guard) rather than silently
-    * skipping deltas — re-create the MV in that case. */
+    * the watermark CAS to a racer re-plans from the new watermark, 3
+    * attempts in all ([[GraftVersions.retryOnConflict]]). A source
+    * vacuumed past W+1 fails loudly on the feed read (the expired-range
+    * guard) rather than silently skipping deltas — re-create the MV in
+    * that case. */
   def refresh(spark: SparkSession, mv: Path,
-      resolveSource: String => Path, maxAttempts: Int = 3): MvInfo = {
-    val props = GraftTableMeta.read(mv)
-    if (!props.contains("mv.name")) throw new IllegalStateException(
-      s"$mv is not a materialized view (no mv.name property)")
-    try
+      resolveSource: String => Path): MvInfo =
+    GraftVersions.retryOnConflict {
+      val props = GraftTableMeta.read(mv)
+      if (!props.contains("mv.name")) throw new IllegalStateException(
+        s"$mv is not a materialized view (no mv.name property)")
       if (props.contains("mv.dim") || props.contains("mv.dims"))
         refreshJoin(spark, mv, props, resolveSource)
       else refreshAgg(spark, mv, props, resolveSource)
-    catch {
-      case _: GraftVersions.ConcurrentCommitException if maxAttempts > 1 =>
-        refresh(spark, mv, resolveSource, maxAttempts - 1)
     }
-  }
 
   /** The view's live group count, off its manifest's row counters. */
   private def liveGroups(mv: Path): Long = GraftVersions.latest(mv)
@@ -479,7 +454,7 @@ object GraftMv {
     // ledger and the snapshot version non-atomically (a racing refresh
     // committing in between) would pair W with a state that already
     // folded part of (W, S]. One lock acquisition makes the pair
-    // coherent; the commit-time CAS in swapIn covers every race AFTER
+    // coherent; the commit-time CAS in ledgered covers every race AFTER
     // this point (r16 ADVICE high).
     val (w, mvVersion) = GraftVersions.withTableLock(mv) {
       (GraftVersions.lastTxnEpoch(mv, AppId)
@@ -544,8 +519,8 @@ object GraftMv {
           unaffected.unionByName(recomputed)),
           nAffected)
       }
-    swapIn(mv, refreshed, "mv-refresh", epoch = s,
-      expectWatermark = Some(Some(w))) match {
+    swapIn(mv, refreshed)(ledgered(mv, "mv-refresh", epoch = s,
+      expectWatermark = Some(Some(w)))) match {
       case Some((info, groups)) =>
         MvInfo(s, groups, applied, info.version, refreshed = true,
           recomputed = nRecomputed)
@@ -816,15 +791,11 @@ object GraftMv {
       val rows = joinSeed(spark, name, fact, s, dimPaths.zip(dvs),
         spec.aliases, spec.conds, keyExpr, sumExpr)
       val committed =
-        if (s > w) swapIn(mv, rows, "mv-reseed", epoch = s,
-          expectWatermark = Some(Some(w)))
-        else {
-          val landed = stageRows(mv, rows)
-          Some((GraftVersions.advance(mv, "mv-reseed",
-            removed = None, added = landed,
-            readVersion = Some(mvVersion)),
-            landed.flatMap(_.rows).sum))
-        }
+        if (s > w) swapIn(mv, rows)(ledgered(mv, "mv-reseed", epoch = s,
+          expectWatermark = Some(Some(w))))
+        else swapIn(mv, rows)(landed => Some(GraftVersions.advance(mv,
+          "mv-reseed", removed = None, added = landed,
+          readVersion = Some(mvVersion))))
       committed match {
         case Some((info, groups)) =>
           GraftVersions.withTableLock(mv) {
@@ -850,8 +821,8 @@ object GraftMv {
         dimPaths.zip(dimWs).map { case (p, dw) => pinned(spark, p, dw) },
         spec.aliases, spec.conds, keyExpr, sumExpr, cdfSign)
       val refreshed = fold(name, current.unionByName(deltas))
-      swapIn(mv, refreshed, "mv-refresh", epoch = s,
-        expectWatermark = Some(Some(w))) match {
+      swapIn(mv, refreshed)(ledgered(mv, "mv-refresh", epoch = s,
+        expectWatermark = Some(Some(w)))) match {
         case Some((info, groups)) =>
           MvInfo(s, groups, applied, info.version, refreshed = true)
         case None => replayedInfo(mv, s, mvVersion)

@@ -663,8 +663,7 @@ object GraftVersions {
     // row count: the concat rewrite cannot carry them — skip the policy
     // rather than drop them from the snapshot
     if (entries.size <= threshold || entries.exists(_.rows.isEmpty)) None
-    else Some(compactConcat(root, math.max(1, threshold / 2),
-      maxAttempts = 3))
+    else Some(compactConcat(root, math.max(1, threshold / 2)))
   }
 
   /** Run the snapshot-retention policy: with `retention.versions = N`
@@ -681,18 +680,6 @@ object GraftVersions {
     require(keep >= 1, s"retention.versions must be >= 1 on $root")
     if (listVersionNumbers(root).size > keep) vacuum(root, keepLast = keep)
   }
-
-  /** Commit a merge-on-read DELETE: fold per-file deleted row
-    * POSITIONS into the live snapshot's deletion vectors — no data
-    * file is read, written, or removed; the commit is one manifest
-    * line per touched file. Runs under the table lock so two
-    * concurrent MOR deletes merge (union of masks), never lose one
-    * side's rows. A file whose mask reaches its physical row count is
-    * dropped from the live set entirely (its bytes stay for time
-    * travel; vacuum reclaims them) — the manifest analog of Delta's
-    * fully-deleted-file compaction. */
-  def applyDeletes(root: Path, deletes: Map[String, Seq[Long]])
-      : VersionInfo = applyDelta(root, deletes, Nil, "delete")
 
   /** Commit a merge-on-read row-level DELTA: fold per-file deleted row
     * POSITIONS into the live snapshot's deletion vectors AND append
@@ -854,6 +841,84 @@ object GraftVersions {
     v
   }
 
+  /** Re-run `body` after a [[ConcurrentCommitException]], 3 attempts
+    * in all; the third conflict propagates, and so does any other
+    * exception, at once. The rewrites that plan against the live
+    * snapshot OUTSIDE the table lock and commit against the snapshot
+    * they read (`readVersion`, or the MV watermark CAS) run through it:
+    * a writer landing mid-rewrite made the plan stale, so `body`
+    * re-reads the snapshot and re-plans. Files a lost attempt landed
+    * stay unreferenced, and vacuum reclaims them. */
+  private[sources] def retryOnConflict[T](body: => T): T = {
+    def attempt(left: Int): T =
+      try body
+      catch {
+        case _: ConcurrentCommitException if left > 1 => attempt(left - 1)
+      }
+    attempt(3)
+  }
+
+  /** The write option of a rewrite of existing rows: identity cells
+    * pass through and generated cells recompute, so a GENERATED ALWAYS
+    * AS IDENTITY table's own rows do not trip the explicit-values
+    * guard. */
+  private val RewriteOption = Map("graftRewrite" -> "true")
+
+  /** Table properties that are maintenance policies, run by a data
+    * commit on the table itself (auto-compaction, snapshot retention,
+    * dependent-view refresh). */
+  private val MaintenanceProperties =
+    Set("compact.threshold", "retention.versions", "mv.dependents")
+
+  /** Land `rows` as new part files of `root` without committing them:
+    * the staging half every rewrite of live rows shares (OPTIMIZE,
+    * scoped OPTIMIZE, equality-mask materialization, materialized-view
+    * swaps). The rows are written into a VERSIONED scratch table at
+    * `_staging/rewrite-<uuid>`, so its commit records per-file stats;
+    * the staged files then move into `root` as `part-%05d-<uuid>.tsv`.
+    * The scratch table mirrors the table's quality properties (blooms,
+    * constraints) but not its [[MaintenanceProperties]]: a policy run by
+    * the scratch commit would rewrite the staged layout before it lands
+    * (auto-compaction folding a clustered rewrite into one file). The
+    * caller commits the returned entries; files a failed commit leaves
+    * behind are unreferenced, and vacuum or [[removeOrphans]] reclaims
+    * them, as it reclaims the scratch table of a driver that died
+    * mid-rewrite. */
+  private[sources] def stageRewrite(root: Path,
+      rows: org.apache.spark.sql.DataFrame,
+      writeOptions: Map[String, String] = Map.empty): Seq[FileEntry] = {
+    val tag = java.util.UUID.randomUUID.toString.replace("-", "")
+    val scratch = root.resolve("_staging").resolve(s"rewrite-$tag")
+    Files.createDirectories(scratch)
+    try {
+      enable(scratch)
+      GraftTableMeta.write(scratch,
+        GraftTableMeta.read(root) -- MaintenanceProperties)
+      rows.write.format("graft.sources.GraftDocsSource")
+        .option("path", scratch.toString).options(writeOptions)
+        .mode("append").save()
+      latest(scratch).map(_.entries).getOrElse(Nil).zipWithIndex.map {
+        case (e, i) =>
+          val name = f"part-$i%05d-$tag.tsv"
+          Files.move(scratch.resolve(e.name), root.resolve(name),
+            StandardCopyOption.ATOMIC_MOVE)
+          // copy() carries EVERY per-file fact (stats, bloom, rows,
+          // bytes) — a field-list here silently drops the next fact we
+          // add (the bloom-drop regression pinned in VersioningSpec).
+          // dv is structurally absent: the rewrite read only live rows,
+          // so the masks are materialized away.
+          e.copy(name = name)
+      }
+    } finally {
+      try org.apache.commons.io.FileUtils.deleteDirectory(scratch.toFile)
+      catch { case _: java.io.IOException => () }
+      // remove _staging itself when this was the last writer
+      try Files.deleteIfExists(root.resolve("_staging")) catch {
+        case _: java.nio.file.DirectoryNotEmptyException => ()
+      }
+    }
+  }
+
   /** OPTIMIZE-style small-file compaction: rewrite the LIVE snapshot's
     * rows into `targetFiles` part files and commit them as a
     * `dataChange = false` snapshot — time travel to every prior version
@@ -864,16 +929,15 @@ object GraftVersions {
     * advance, so a crash mid-compaction leaves only unreferenced files
     * (vacuum reclaims them), never a corrupted snapshot. Cost is one
     * read + one write of the live rows — the classic nightly OPTIMIZE
-    * a 100 TB table runs per partition, never a log rewrite. */
+    * a 100 TB table runs per partition, never a log rewrite.
+    *
+    * The rewrite reads the live rows OUTSIDE the table lock, so the
+    * commit validates against the snapshot it read: a writer landing
+    * mid-compaction re-runs the whole compaction against the new live
+    * state, 3 attempts in all ([[retryOnConflict]]), instead of being
+    * silently dropped by the remove-all advance. */
   def compact(spark: org.apache.spark.sql.SparkSession, root: Path,
       targetFiles: Int = 1,
-      // optimistic-concurrency retries: the rewrite reads the live
-      // rows OUTSIDE the table lock, so a concurrent commit landing
-      // mid-compaction would be silently dropped by the remove-all
-      // advance — instead the commit validates against the snapshot
-      // the rewrite read (readVersion) and a conflict re-runs the
-      // whole compaction against the new live state
-      maxAttempts: Int = 3,
       // cluster the rewrite so the per-file min/max stats get TIGHT:
       //  - one column: range-partition + sort — files get disjoint
       //    sorted ranges, selective scans on that column plan 1-2 files;
@@ -902,108 +966,88 @@ object GraftVersions {
           s"$root would reassign row ids; drop 'row.tracking' or run " +
           "bin-packing OPTIMIZE (no cluster columns), which preserves " +
           "row lineage")
-      return compactConcat(root, n, maxAttempts)
+      return compactConcat(root, n)
     }
-    // the snapshot this rewrite is OF — the commit below validates no
-    // one advanced the table while the rewrite ran
-    val readVersion = latest(root).map(_.version).getOrElse(
-      throw new IllegalStateException(s"compact on empty version log: $root"))
+    retryOnConflict {
+      // the snapshot this rewrite is OF — the commit below validates no
+      // one advanced the table while the rewrite ran
+      val readVersion = latest(root).map(_.version).getOrElse(
+        throw new IllegalStateException(s"compact on empty version log: $root"))
+      val df = spark.read.format("graft.sources.GraftDocsSource")
+        .option("path", root.toString).load()
+      val (live, writeOpts): (org.apache.spark.sql.DataFrame,
+          Map[String, String]) = clusterBy match {
+        case Nil => (df.coalesce(n), Map.empty)
+        case Seq(c) =>
+          (df.repartitionByRange(n, col(c)).sortWithinPartitions(c), Map.empty)
+        case cols =>
+          // global per-column bounds for the 16-bit scaling, from the live
+          // manifest's file stats when every file carries them (a driver-
+          // side set union — no data read); files predating stats fall
+          // back to one aggregate pass over the live rows
+          val entries = latest(root).map(_.entries).getOrElse(Nil)
+          val bounds: Map[String, (Long, Long)] =
+            if (entries.nonEmpty && cols.forall(c =>
+                entries.forall(_.stats.contains(c)))) {
+              cols.map { c =>
+                val s = entries.flatMap(_.stats.get(c))
+                  .filter(r => r._1 <= r._2)
+                c -> (if (s.isEmpty) (0L, 0L)
+                      else (s.map(_._1).min, s.map(_._2).max))
+              }.toMap
+            } else {
+              val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+              val r = df.agg(aggs.head, aggs.tail: _*).head()
+              cols.zipWithIndex.map { case (c, i) =>
+                c -> (r.getLong(2 * i), r.getLong(2 * i + 1))
+              }.toMap
+            }
+          val z = zOrderValue(cols.map(c =>
+            (col(c), bounds(c)._1, bounds(c)._2)))
+          // Assign output files by the top ceil(log2 n) bits of the
+          // Z-value: file boundaries sit exactly on Z-quadrant corners,
+          // so every file's stats box is one tight hyper-rectangle. A
+          // repartitionByRange on z would cut wherever range-exchange
+          // SAMPLING landed — smearing a few rows of one quadrant into
+          // the next file widens that file's box to the union of both
+          // quadrants and can erase the skipping on one whole axis
+          // (observed, not hypothetical). The exchange is therefore a
+          // plain HASH repartition on the (deterministic) file id — it
+          // only has to CO-LOCATE each file id in one task, not order
+          // the tasks — and the DSv2 writer splits its task by the same
+          // file-id function ([[GraftZOrderFan]], recomputed row-side
+          // with identical integer arithmetic), so bin = file without
+          // leaving the DataFrame/DSv2 write path. One shuffle, as
+          // before; rows sort by z within the task, and since the file
+          // id is the z-value's high bits, every file receives its rows
+          // as one contiguous sorted run.
+          val fan = GraftZOrderFan(
+            cols.map(c => (c, bounds(c)._1, bounds(c)._2)), n)
+          val fileId =
+            shiftright(shiftright(z, fan.shift) * n, fan.bits).cast("long")
+          (df.repartition(n, fileId).sortWithinPartitions(z),
+            Map("zorderFanout" -> fan.encode))
+      }
+      advance(root, "compact", removed = None,
+        added = stageRewrite(root, live, writeOpts ++ RewriteOption),
+        dataChange = false, readVersion = Some(readVersion))
+    }
+  }
+
+  /** The live rows of `files` (the reader applies dv + eq masks),
+    * scoped through the `_file` metadata column: a static
+    * `_file IN (...)` whitelist prunes the scan at plan time. `_file`
+    * carries BASENAMES (a branch's fork references are
+    * ../../-relative manifest names). */
+  private def liveRowsOf(spark: org.apache.spark.sql.SparkSession,
+      root: Path, files: Seq[FileEntry]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
     val df = spark.read.format("graft.sources.GraftDocsSource")
       .option("path", root.toString).load()
-    val (live, writeOpts): (org.apache.spark.sql.DataFrame,
-        Map[String, String]) = clusterBy match {
-      case Nil => (df.coalesce(n), Map.empty)
-      case Seq(c) =>
-        (df.repartitionByRange(n, col(c)).sortWithinPartitions(c), Map.empty)
-      case cols =>
-        // global per-column bounds for the 16-bit scaling, from the live
-        // manifest's file stats when every file carries them (a driver-
-        // side set union — no data read); files predating stats fall
-        // back to one aggregate pass over the live rows
-        val entries = latest(root).map(_.entries).getOrElse(Nil)
-        val bounds: Map[String, (Long, Long)] =
-          if (entries.nonEmpty && cols.forall(c =>
-              entries.forall(_.stats.contains(c)))) {
-            cols.map { c =>
-              val s = entries.flatMap(_.stats.get(c)).filter(r => r._1 <= r._2)
-              c -> (if (s.isEmpty) (0L, 0L)
-                    else (s.map(_._1).min, s.map(_._2).max))
-            }.toMap
-          } else {
-            val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
-            val r = df.agg(aggs.head, aggs.tail: _*).head()
-            cols.zipWithIndex.map { case (c, i) =>
-              c -> (r.getLong(2 * i), r.getLong(2 * i + 1))
-            }.toMap
-          }
-        val z = zOrderValue(cols.map(c =>
-          (col(c), bounds(c)._1, bounds(c)._2)))
-        // Assign output files by the top ceil(log2 n) bits of the
-        // Z-value: file boundaries sit exactly on Z-quadrant corners,
-        // so every file's stats box is one tight hyper-rectangle. A
-        // repartitionByRange on z would cut wherever range-exchange
-        // SAMPLING landed — smearing a few rows of one quadrant into
-        // the next file widens that file's box to the union of both
-        // quadrants and can erase the skipping on one whole axis
-        // (observed, not hypothetical). The exchange is therefore a
-        // plain HASH repartition on the (deterministic) file id — it
-        // only has to CO-LOCATE each file id in one task, not order
-        // the tasks — and the DSv2 writer splits its task by the same
-        // file-id function ([[GraftZOrderFan]], recomputed row-side
-        // with identical integer arithmetic), so bin = file without
-        // leaving the DataFrame/DSv2 write path. One shuffle, as
-        // before; rows sort by z within the task, and since the file
-        // id is the z-value's high bits, every file receives its rows
-        // as one contiguous sorted run.
-        val fan = GraftZOrderFan(
-          cols.map(c => (c, bounds(c)._1, bounds(c)._2)), n)
-        val fileId =
-          shiftright(shiftright(z, fan.shift) * n, fan.bits).cast("long")
-        (df.repartition(n, fileId).sortWithinPartitions(z),
-          Map("zorderFanout" -> fan.encode))
-    }
-    val tmp = Files.createTempDirectory(root, "_compact")
-    try {
-      // the rewrite lands in a VERSIONED scratch dir so its commit
-      // records per-file min/max stats; those stats (and blooms — the
-      // table's quality properties are mirrored into the scratch dir)
-      // ride along into the compact manifest under the final names
-      enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
-      live.write.format("graft.sources.GraftDocsSource")
-        .option("path", tmp.toString).options(writeOpts)
-        // rewrite semantics: identity cells pass through, generated
-        // cells recompute — a GENERATED ALWAYS AS IDENTITY table's own
-        // rows must not trip the explicit-values guard
-        .option("graftRewrite", "true")
-        .mode("append").save()
-      val staged = latest(tmp).map(_.entries).getOrElse(Nil)
-      // land beside the originals under collision-free names
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      val landed = staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        // copy() carries EVERY per-file fact (stats, bloom, rows,
-        // bytes) — a field-list here silently drops the next fact we
-        // add (the bloom-drop regression of wave 5, pinned in
-        // VersioningSpec). dv is structurally absent: the rewrite read
-        // only live rows, so the masks are materialized away.
-        e.copy(name = name)
-      }
-      try advance(root, "compact", removed = None, added = landed,
-        dataChange = false, readVersion = Some(readVersion))
-      catch {
-        case e: ConcurrentCommitException if maxAttempts > 1 =>
-          // a writer advanced the table mid-compaction: the rewrite is
-          // of a stale snapshot. The landed files stay unreferenced
-          // (vacuum reclaims them); re-run against the new live state.
-          compact(spark, root, targetFiles, maxAttempts - 1, clusterBy)
-      }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      catch { case _: java.io.IOException => () }
-    }
+    df.select(df.col("*"), col("_file"))
+      .filter(col("_file").isin(
+        files.map(e => GraftFiles.baseName(e.name)): _*))
+      .drop("_file")
   }
 
   /** Size-triggered equality-delete materialization: when the live
@@ -1031,58 +1075,64 @@ object GraftVersions {
 
   /** Rewrite the eq-masked files of the live snapshot into clean
     * replacements (see [[maybeMaterializeEq]]); None when nothing is
-    * masked or the table is row-tracked. */
+    * masked or the table is row-tracked. A writer landing mid-rewrite
+    * re-runs it against the new live state, 3 attempts in all
+    * ([[retryOnConflict]]). */
   def materializeEqMasks(spark: org.apache.spark.sql.SparkSession,
-      root: Path, maxAttempts: Int = 3): Option[VersionInfo] = {
-    import org.apache.spark.sql.functions._
-    val snap = latest(root).getOrElse(return None)
+      root: Path): Option[VersionInfo] = {
     if (GraftTableMeta.read(root).get("row.tracking").contains("true"))
       return None
-    val masked = snap.entries.filter(_.eq.exists(_.cardinality > 0))
-    if (masked.isEmpty) return None
-    val names = masked.map(_.name)
-    val df = spark.read.format("graft.sources.GraftDocsSource")
-      .option("path", root.toString).load()
-    // scope the read to the masked files via the _file metadata column
-    // (the reader applies dv + eq masks, so exactly the LIVE rows
-    // survive), one output file per input file. _file carries BASENAMES
-    // (a branch's fork references are ../../-relative manifest names)
-    val live = df.select((df.columns.map(col) :+ col("_file")): _*)
-      .filter(col("_file").isin(
-        names.map(n => GraftFiles.baseName(n)): _*))
-      .drop("_file")
-      .coalesce(math.max(1, names.size))
-    val tmp = Files.createTempDirectory(root, "_eqmat")
-    try {
-      enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
-      live.write.format("graft.sources.GraftDocsSource")
-        .option("path", tmp.toString)
-        // rewrite semantics (see compact): existing identity values
-        // pass through rather than tripping the GENERATED ALWAYS guard
-        .option("graftRewrite", "true")
-        .mode("append").save()
-      val staged = latest(tmp).map(_.entries).getOrElse(Nil)
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      val landed = staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        e.copy(name = name)
+    retryOnConflict(latest(root).flatMap { snap =>
+      val masked = snap.entries.filter(_.eq.exists(_.cardinality > 0))
+      Option.when(masked.nonEmpty) {
+        // one output file per input file
+        val live = liveRowsOf(spark, root, masked)
+          .coalesce(math.max(1, masked.size))
+        advance(root, "eq-materialize",
+          removed = Some(masked.map(_.name).toSet),
+          added = stageRewrite(root, live, RewriteOption),
+          dataChange = false, readVersion = Some(snap.version))
       }
-      try Some(advance(root, "eq-materialize", removed = Some(names.toSet),
-        added = landed, dataChange = false,
-        readVersion = Some(snap.version)))
-      catch {
-        case _: ConcurrentCommitException if maxAttempts > 1 =>
-          // a writer advanced the table mid-rewrite: the landed files
-          // stay unreferenced (vacuum reclaims them); re-run against
-          // the new live state
-          materializeEqMasks(spark, root, maxAttempts - 1)
+    })
+  }
+
+  /** SCOPED OPTIMIZE — Iceberg's `rewrite_data_files(filter => ...)`:
+    * compact ONLY the live files PROVABLY single-valued at
+    * `col = value` (manifest min == max == value — the shape every
+    * value-partitioned write produces), leaving every other file
+    * untouched. At 100 TB maintenance runs per PARTITION, never per
+    * table: the rewrite reads exactly the scoped files (a static
+    * `_file IN (...)` whitelist prunes the scan at plan time, same as
+    * the ANALYZE backfill), and the commit is a PARTIAL swap —
+    * removed = the scoped members, added = their rewrite — validated
+    * against the snapshot the rewrite read (a concurrent commit
+    * re-runs the scoped pass, never loses either side). May-contain
+    * files (wide ranges that merely overlap the value) are NOT scoped:
+    * rewriting them would drag foreign partitions' rows through a
+    * maintenance pass scoped to one. A writer landing mid-rewrite
+    * re-runs the scoped pass against the new live state, 3 attempts in
+    * all ([[retryOnConflict]]). */
+  def compactScoped(spark: org.apache.spark.sql.SparkSession, root: Path,
+      column: String, value: Long, targetFiles: Int = 1): VersionInfo = {
+    require(isVersioned(root), s"scoped compact needs a versioned table: $root")
+    if (GraftTableMeta.read(root).get("row.tracking").contains("true"))
+      throw new UnsupportedOperationException(
+        s"scoped OPTIMIZE on row-tracked table $root would reassign the " +
+          "scoped rows' ids; run bin-packing OPTIMIZE (concat preserves " +
+          "lineage) or drop 'row.tracking'")
+    retryOnConflict {
+      val snap = latest(root).getOrElse(throw new IllegalStateException(
+        s"scoped compact on empty version log: $root"))
+      val members = snap.entries.filter(e => e.rows.exists(_ > 0) &&
+        e.stats.get(column).contains((value, value)))
+      if (members.length <= math.max(targetFiles, 1)) snap
+      else {
+        val scoped = liveRowsOf(spark, root, members)
+          .coalesce(math.max(targetFiles, 1))
+        advance(root, "compact", removed = Some(members.map(_.name).toSet),
+          added = stageRewrite(root, scoped, RewriteOption),
+          dataChange = false, readVersion = Some(snap.version))
       }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      catch { case _: java.io.IOException => () }
     }
   }
 
@@ -1102,245 +1152,173 @@ object GraftVersions {
     * At cluster scale the concatenation is an executor-side copy task
     * per output file (bytes stream, nothing decodes); here it is the
     * driver's NIO copy of the same bounded per-bin byte volume. */
-  /** SCOPED OPTIMIZE — Iceberg's `rewrite_data_files(filter => ...)`:
-    * compact ONLY the live files PROVABLY single-valued at
-    * `col = value` (manifest min == max == value — the shape every
-    * value-partitioned write produces), leaving every other file
-    * untouched. At 100 TB maintenance runs per PARTITION, never per
-    * table: the rewrite reads exactly the scoped files (a static
-    * `_file IN (...)` whitelist prunes the scan at plan time, same as
-    * the ANALYZE backfill), and the commit is a PARTIAL swap —
-    * removed = the scoped members, added = their rewrite — validated
-    * against the snapshot the rewrite read (a concurrent commit
-    * re-runs the scoped pass, never loses either side). May-contain
-    * files (wide ranges that merely overlap the value) are NOT scoped:
-    * rewriting them would drag foreign partitions' rows through a
-    * maintenance pass scoped to one. */
-  def compactScoped(spark: org.apache.spark.sql.SparkSession, root: Path,
-      column: String, value: Long, targetFiles: Int = 1,
-      maxAttempts: Int = 3): VersionInfo = {
-    import org.apache.spark.sql.functions.col
-    require(isVersioned(root), s"scoped compact needs a versioned table: $root")
-    if (GraftTableMeta.read(root).get("row.tracking").contains("true"))
-      throw new UnsupportedOperationException(
-        s"scoped OPTIMIZE on row-tracked table $root would reassign the " +
-          "scoped rows' ids; run bin-packing OPTIMIZE (concat preserves " +
-          "lineage) or drop 'row.tracking'")
-    val snap = latest(root).getOrElse(throw new IllegalStateException(
-      s"scoped compact on empty version log: $root"))
-    val members = snap.entries.filter(e => e.rows.exists(_ > 0) &&
-      e.stats.get(column).contains((value, value)))
-    if (members.length <= math.max(targetFiles, 1)) return snap
-    val names = members.map(e => GraftFiles.baseName(e.name))
-    val live = spark.read.format("graft.sources.GraftDocsSource")
-      .option("path", root.toString).load()
-    val scoped = live.select(live.col("*"), col("_file"))
-      .filter(col("_file").isin(names: _*)).drop("_file")
-      .coalesce(math.max(targetFiles, 1))
-    val tmp = Files.createTempDirectory(root, "_compact")
-    try {
-      GraftVersions.enable(tmp)
-      GraftTableMeta.write(tmp, GraftTableMeta.read(root))
-      scoped.write.format("graft.sources.GraftDocsSource")
-        .option("path", tmp.toString)
-        .option("graftRewrite", "true")
-        .mode("append").save()
-      val staged = latest(tmp).map(_.entries).getOrElse(Nil)
-      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-      val landed = staged.zipWithIndex.map { case (e, i) =>
-        val name = f"part-$i%05d-$tag.tsv"
-        Files.move(tmp.resolve(e.name), root.resolve(name),
-          StandardCopyOption.ATOMIC_MOVE)
-        e.copy(name = name)
-      }
-      try advance(root, "compact", removed = Some(members.map(_.name).toSet),
-        added = landed, dataChange = false,
-        readVersion = Some(snap.version))
-      catch {
-        case _: ConcurrentCommitException if maxAttempts > 1 =>
-          compactScoped(spark, root, column, value, targetFiles,
-            maxAttempts - 1)
-      }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      catch { case _: java.io.IOException => () }
-    }
-  }
-
-  private def compactConcat(root: Path, targetFiles: Int,
-      maxAttempts: Int): VersionInfo = {
-    val snap = latest(root).getOrElse(throw new IllegalStateException(
-      s"compact on empty version log: $root"))
-    val members = snap.entries.filter(_.rows.exists(_ > 0))
-    if (members.isEmpty)
-      return advance(root, "compact", removed = None, added = Nil,
-        dataChange = false, readVersion = Some(snap.version))
-    // EQUALITY-DELETE constraint on concat: an eq set applies to every
-    // row of ITS file — concatenating files with different eq sets
-    // would extend one file's value mask over another's rows (and kill
-    // a legitimately re-inserted key). Files sharing an IDENTICAL eq
-    // set concat safely; others bin apart, keyed by the exact value set.
-    def eqKey(e: FileEntry): Seq[Long] =
-      e.eq.map(_.positions.toSeq).getOrElse(Nil)
-    // value-partitioned tables: a concat across partition values would
-    // widen the layout column's min=max stat to a range and erase the
-    // manifest's partition pruning — bin within one value only
-    val valueCol = GraftTableMeta.read(root).get("layout.values")
-    def pvKey(e: FileEntry): Option[(Long, Long)] =
-      valueCol.flatMap(e.stats.get)
-    // bins: one per bucket class when the table declares a layout;
-    // otherwise sequential fill toward equal byte shares of n bins
-    val bins: Seq[Seq[FileEntry]] =
-      if (GraftTableMeta.bucketLayout(root).isDefined)
-        // never merge across bucket classes OR partition specs: a
-        // concat of two specs' files has no single layout to report
-        members.groupBy(e => (e.bucket, e.spec, eqKey(e), pvKey(e))).toSeq
-          .sortBy { case ((b, sp, eqk, pv), _) =>
-            (b.getOrElse(Int.MaxValue), sp.getOrElse(0),
-              eqk.mkString(","), pv.map(_._1).getOrElse(Long.MinValue)) }
-          .map(_._2.sortBy(_.name))
-      else {
-        // sequential fill toward equal byte shares of `target` bins
-        def byteShareFill(group: Seq[FileEntry], target: Int)
-            : Seq[Seq[FileEntry]] = {
-          val sorted = group.sortBy(_.name)
-          val total = sorted.map(e =>
-            e.bytes.getOrElse(Files.size(root.resolve(e.name)))).sum
-          val share = math.max(total / math.max(target, 1), 1L)
-          val out = Seq.newBuilder[Seq[FileEntry]]
-          var cur = Seq.newBuilder[FileEntry]; var acc = 0L; var used = 0
-          sorted.foreach { e =>
-            val sz = e.bytes.getOrElse(Files.size(root.resolve(e.name)))
-            if (acc > 0 && acc + sz > share && used < target - 1) {
-              out += cur.result(); cur = Seq.newBuilder; acc = 0L; used += 1
-            }
-            cur += e; acc += sz
-          }
-          out += cur.result()
-          out.result().filter(_.nonEmpty)
-        }
-        val (eqMasked, eqFree) =
-          members.partition(_.eq.exists(_.cardinality > 0))
-        if (eqMasked.isEmpty && valueCol.isEmpty)
-          byteShareFill(eqFree, targetFiles)
-        else {
-          // eq-masked files bin per distinct value set (a concat across
-          // different sets would extend one mask over another's rows);
-          // value-partitioned files bin per partition value. eq-FREE,
-          // value-free files still honor targetFiles via the byte-share
-          // fill over whatever bin budget the keyed groups left over.
-          val (keyed, free) =
-            eqFree.partition(e => valueCol.isDefined && pvKey(e).isDefined)
-          val keyedBins = (eqMasked ++ keyed)
-            .groupBy(e => (eqKey(e), pvKey(e))).toSeq
-            .sortBy { case ((eqk, pv), _) =>
-              (eqk.mkString(","), pv.map(_._1).getOrElse(Long.MinValue)) }
+  private def compactConcat(root: Path, targetFiles: Int): VersionInfo =
+    retryOnConflict {
+      val snap = latest(root).getOrElse(throw new IllegalStateException(
+        s"compact on empty version log: $root"))
+      // no member leaves every bin empty: the commit then lands an empty
+      // live snapshot
+      val members = snap.entries.filter(_.rows.exists(_ > 0))
+      // EQUALITY-DELETE constraint on concat: an eq set applies to every
+      // row of ITS file — concatenating files with different eq sets
+      // would extend one file's value mask over another's rows (and kill
+      // a legitimately re-inserted key). Files sharing an IDENTICAL eq
+      // set concat safely; others bin apart, keyed by the exact value set.
+      def eqKey(e: FileEntry): Seq[Long] =
+        e.eq.map(_.positions.toSeq).getOrElse(Nil)
+      // value-partitioned tables: a concat across partition values would
+      // widen the layout column's min=max stat to a range and erase the
+      // manifest's partition pruning — bin within one value only
+      val valueCol = GraftTableMeta.read(root).get("layout.values")
+      def pvKey(e: FileEntry): Option[(Long, Long)] =
+        valueCol.flatMap(e.stats.get)
+      // bins: one per bucket class when the table declares a layout;
+      // otherwise sequential fill toward equal byte shares of n bins
+      val bins: Seq[Seq[FileEntry]] =
+        if (GraftTableMeta.bucketLayout(root).isDefined)
+          // never merge across bucket classes OR partition specs: a
+          // concat of two specs' files has no single layout to report
+          members.groupBy(e => (e.bucket, e.spec, eqKey(e), pvKey(e))).toSeq
+            .sortBy { case ((b, sp, eqk, pv), _) =>
+              (b.getOrElse(Int.MaxValue), sp.getOrElse(0),
+                eqk.mkString(","), pv.map(_._1).getOrElse(Long.MinValue)) }
             .map(_._2.sortBy(_.name))
-          keyedBins ++ byteShareFill(free,
-            math.max(1, targetFiles - keyedBins.size))
-        }
-      }
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "")
-    // lineage splicing is a row-tracked concern: on an untracked table
-    // (auto-compaction runs concat everywhere) the entries carry no
-    // segments and must not gain synthetic ones
-    val tracked =
-      GraftTableMeta.read(root).get("row.tracking").contains("true")
-    val landed = bins.zipWithIndex.map { case (bin, i) =>
-      val name = f"part-$i%05d-$tag.tsv"
-      // ORDER-PRESERVING concat: when every member is observed-sorted
-      // and their doc_id envelopes do not interleave, concatenating in
-      // range order yields a file that is itself sorted — the manifest
-      // `sorted=` fact (and the sort-free merge joins it enables) then
-      // SURVIVES auto-compaction instead of resetting on every policy
-      // run. Any doubt (unsorted member, missing envelope, overlapping
-      // ranges) falls back to name order with the flag withheld.
-      val orderable = bin.forall(e =>
-        e.sorted && e.stats.contains("doc_id"))
-      val ranged =
-        if (orderable) bin.sortBy(e => (e.stats("doc_id")._1, e.name))
-        else bin
-      val staysSorted = orderable && ranged.sliding(2).forall {
-        case Seq(a, b) => a.stats("doc_id")._2 <= b.stats("doc_id")._1
-        case _ => true
-      }
-      val ordered = if (staysSorted) ranged else bin
-      val tmp = Files.createTempFile(root, s"_concat-$i-", ".tmp")
-      val out = Files.newOutputStream(tmp)
-      val dvPositions = Seq.newBuilder[Long]
-      val lineage = Seq.newBuilder[(Long, Long, Long)]
-      var offset = 0L
-      try ordered.foreach { e =>
-        val bytes = Files.readAllBytes(root.resolve(e.name))
-        out.write(bytes)
-        // writer rows are always newline-terminated; be defensive so a
-        // foreign file can never glue its last row onto the next member
-        if (bytes.nonEmpty && bytes.last != '\n') out.write('\n')
-        val r = e.rows.get
-        e.dv.foreach(d => d.positions.foreach(p => dvPositions += p + offset))
-        // a member whose segments do not cover its physical rows (or a
-        // pre-tracking member) contributes an id-less segment: NULL ids,
-        // never invented ones
-        if (tracked) {
-          if (e.lineage.nonEmpty && e.lineage.map(_._2).sum == r)
-            lineage ++= e.lineage
-          else lineage += ((-1L, r, -1L))
-        }
-        offset += r
-      } finally out.close()
-      Files.move(tmp, root.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      val statCols = bin.map(_.stats.keySet).reduce(_ intersect _)
-      val blooms = bin.map(_.bloom)
-      val mergedBloom =
-        if (blooms.forall(_.isDefined) &&
-            blooms.flatten.map(_.bits.length).distinct.size == 1) {
-          val acc = new Array[Long](blooms.head.get.bits.length)
-          blooms.flatten.foreach { b =>
-            var j = 0
-            while (j < acc.length) { acc(j) |= b.bits(j); j += 1 }
+        else {
+          // sequential fill toward equal byte shares of `target` bins
+          def byteShareFill(group: Seq[FileEntry], target: Int)
+              : Seq[Seq[FileEntry]] = {
+            val sorted = group.sortBy(_.name)
+            val total = sorted.map(e =>
+              e.bytes.getOrElse(Files.size(root.resolve(e.name)))).sum
+            val share = math.max(total / math.max(target, 1), 1L)
+            val out = Seq.newBuilder[Seq[FileEntry]]
+            var cur = Seq.newBuilder[FileEntry]; var acc = 0L; var used = 0
+            sorted.foreach { e =>
+              val sz = e.bytes.getOrElse(Files.size(root.resolve(e.name)))
+              if (acc > 0 && acc + sz > share && used < target - 1) {
+                out += cur.result(); cur = Seq.newBuilder; acc = 0L; used += 1
+              }
+              cur += e; acc += sz
+            }
+            out += cur.result()
+            out.result().filter(_.nonEmpty)
           }
-          Some(new GraftBloom(acc))
-        } else None
-      val dvs = dvPositions.result()
-      FileEntry(name,
-        stats = statCols.map { c =>
-          val rs = bin.map(_.stats(c))
-          c -> (rs.map(_._1).min, rs.map(_._2).max)
-        }.toMap,
-        bloom = mergedBloom,
-        // NDV sketches union losslessly; a member without one widens
-        // the concat to "unknown" (never a wrong count)
-        ndv =
-          if (bin.forall(_.ndv.isDefined))
-            bin.flatMap(_.ndv).reduceOption(_ merge _)
-              .filter(_.cols.nonEmpty)
-          else None,
-        rows = Some(bin.map(_.rows.get).sum),
-        bytes = Some(Files.size(root.resolve(name))),
-        dv = if (dvs.isEmpty) None else Some(GraftDV.of(dvs)),
-        // binning guarantees one shared eq set per bin — it rides along
-        // (values mask the same keys over the concatenated bytes)
-        eq = bin.head.eq,
-        bucket = bin.map(_.bucket).distinct match {
-          case Seq(b) => b
-          case _ => None
-        },
-        spec = bin.map(_.spec).distinct match {
-          case Seq(sp) => sp
-          case _ => None
-        },
-        sorted = staysSorted,
-        lineage = lineage.result())
+          val (eqMasked, eqFree) =
+            members.partition(_.eq.exists(_.cardinality > 0))
+          if (eqMasked.isEmpty && valueCol.isEmpty)
+            byteShareFill(eqFree, targetFiles)
+          else {
+            // eq-masked files bin per distinct value set (a concat across
+            // different sets would extend one mask over another's rows);
+            // value-partitioned files bin per partition value. eq-FREE,
+            // value-free files still honor targetFiles via the byte-share
+            // fill over whatever bin budget the keyed groups left over.
+            val (keyed, free) =
+              eqFree.partition(e => valueCol.isDefined && pvKey(e).isDefined)
+            val keyedBins = (eqMasked ++ keyed)
+              .groupBy(e => (eqKey(e), pvKey(e))).toSeq
+              .sortBy { case ((eqk, pv), _) =>
+                (eqk.mkString(","), pv.map(_._1).getOrElse(Long.MinValue)) }
+              .map(_._2.sortBy(_.name))
+            keyedBins ++ byteShareFill(free,
+              math.max(1, targetFiles - keyedBins.size))
+          }
+        }
+      val tag = java.util.UUID.randomUUID.toString.replace("-", "")
+      // lineage splicing is a row-tracked concern: on an untracked table
+      // (auto-compaction runs concat everywhere) the entries carry no
+      // segments and must not gain synthetic ones
+      val tracked =
+        GraftTableMeta.read(root).get("row.tracking").contains("true")
+      val landed = bins.zipWithIndex.map { case (bin, i) =>
+        val name = f"part-$i%05d-$tag.tsv"
+        // ORDER-PRESERVING concat: when every member is observed-sorted
+        // and their doc_id envelopes do not interleave, concatenating in
+        // range order yields a file that is itself sorted — the manifest
+        // `sorted=` fact (and the sort-free merge joins it enables) then
+        // SURVIVES auto-compaction instead of resetting on every policy
+        // run. Any doubt (unsorted member, missing envelope, overlapping
+        // ranges) falls back to name order with the flag withheld.
+        val orderable = bin.forall(e =>
+          e.sorted && e.stats.contains("doc_id"))
+        val ranged =
+          if (orderable) bin.sortBy(e => (e.stats("doc_id")._1, e.name))
+          else bin
+        val staysSorted = orderable && ranged.sliding(2).forall {
+          case Seq(a, b) => a.stats("doc_id")._2 <= b.stats("doc_id")._1
+          case _ => true
+        }
+        val ordered = if (staysSorted) ranged else bin
+        val tmp = Files.createTempFile(root, s"_concat-$i-", ".tmp")
+        val out = Files.newOutputStream(tmp)
+        val dvPositions = Seq.newBuilder[Long]
+        val lineage = Seq.newBuilder[(Long, Long, Long)]
+        var offset = 0L
+        try ordered.foreach { e =>
+          val bytes = Files.readAllBytes(root.resolve(e.name))
+          out.write(bytes)
+          // writer rows are always newline-terminated; be defensive so a
+          // foreign file can never glue its last row onto the next member
+          if (bytes.nonEmpty && bytes.last != '\n') out.write('\n')
+          val r = e.rows.get
+          e.dv.foreach(d => d.positions.foreach(p => dvPositions += p + offset))
+          // a member whose segments do not cover its physical rows (or a
+          // pre-tracking member) contributes an id-less segment: NULL ids,
+          // never invented ones
+          if (tracked) {
+            if (e.lineage.nonEmpty && e.lineage.map(_._2).sum == r)
+              lineage ++= e.lineage
+            else lineage += ((-1L, r, -1L))
+          }
+          offset += r
+        } finally out.close()
+        Files.move(tmp, root.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+        val statCols = bin.map(_.stats.keySet).reduce(_ intersect _)
+        val blooms = bin.map(_.bloom)
+        val mergedBloom =
+          if (blooms.forall(_.isDefined) &&
+              blooms.flatten.map(_.bits.length).distinct.size == 1) {
+            val acc = new Array[Long](blooms.head.get.bits.length)
+            blooms.flatten.foreach { b =>
+              var j = 0
+              while (j < acc.length) { acc(j) |= b.bits(j); j += 1 }
+            }
+            Some(new GraftBloom(acc))
+          } else None
+        val dvs = dvPositions.result()
+        FileEntry(name,
+          stats = statCols.map { c =>
+            val rs = bin.map(_.stats(c))
+            c -> (rs.map(_._1).min, rs.map(_._2).max)
+          }.toMap,
+          bloom = mergedBloom,
+          // NDV sketches union losslessly; a member without one widens
+          // the concat to "unknown" (never a wrong count)
+          ndv =
+            if (bin.forall(_.ndv.isDefined))
+              bin.flatMap(_.ndv).reduceOption(_ merge _)
+                .filter(_.cols.nonEmpty)
+            else None,
+          rows = Some(bin.map(_.rows.get).sum),
+          bytes = Some(Files.size(root.resolve(name))),
+          dv = if (dvs.isEmpty) None else Some(GraftDV.of(dvs)),
+          // binning guarantees one shared eq set per bin — it rides along
+          // (values mask the same keys over the concatenated bytes)
+          eq = bin.head.eq,
+          bucket = bin.map(_.bucket).distinct match {
+            case Seq(b) => b
+            case _ => None
+          },
+          spec = bin.map(_.spec).distinct match {
+            case Seq(sp) => sp
+            case _ => None
+          },
+          sorted = staysSorted,
+          lineage = lineage.result())
+      }
+      advance(root, "compact", removed = None, added = landed,
+        dataChange = false, readVersion = Some(snap.version))
     }
-    try advance(root, "compact", removed = None, added = landed,
-      dataChange = false, readVersion = Some(snap.version))
-    catch {
-      case _: ConcurrentCommitException if maxAttempts > 1 =>
-        // a writer advanced the table mid-concat: the landed files stay
-        // unreferenced (vacuum reclaims them); re-pack the new live set
-        compactConcat(root, targetFiles, maxAttempts - 1)
-    }
-  }
 
   /** The Z-ORDER file-assignment function, shared by the exchange and
     * the DSv2 writer: the compact rewrite hash-repartitions on
@@ -1881,27 +1859,6 @@ object GraftVersions {
 
   final case class OrphanStats(removed: Seq[String], bytes: Long)
 
-  /** Iceberg-style `remove_orphan_files`: reclaim files under the table
-    * directory that NO manifest (of any retained version) references —
-    * the debris [[vacuum]] cannot see, because vacuum only walks the
-    * log: crashed compactions' landed-but-uncommitted part files,
-    * interrupted concat temps, and abandoned `_staging/<queryId>` dirs
-    * from jobs that died between task commit and driver commit.
-    *
-    * The `olderThanMicros` cutoff is the same safety valve Iceberg
-    * requires: an in-flight writer's staged files are indistinguishable
-    * from debris by name, so only files whose mtime predates the cutoff
-    * are eligible — run with a cutoff older than the longest possible
-    * job, never "now", on a table with live writers. Same caveat as
-    * Delta documents for shallow clones: a clone references its
-    * source's files through the CLONE's manifest, which this table's
-    * log knows nothing about — vacuuming/orphan-sweeping a clone SOURCE
-    * below the snapshots its clones were taken from can strand them.
-    * Never touches `_versions` (the log itself), `_table.properties`,
-    * `_branches` (each branch is its own versioned table with its own
-    * log), or `_SUCCESS`. Runs under the table lock so a concurrent
-    * commit cannot land files between the reference scan and the
-    * delete. */
   /** Root files a LIVE BRANCH still references (ref-aware retention,
     * Iceberg's expire_snapshots contract): a branch's manifests name
     * root files through `../../`-relative entries, so every root file
@@ -1921,6 +1878,30 @@ object GraftVersions {
     }.toSet
   }
 
+  /** Iceberg-style `remove_orphan_files`: reclaim files under the table
+    * directory that NO manifest (of any retained version) references —
+    * the debris [[vacuum]] cannot see, because vacuum only walks the
+    * log: crashed compactions' landed-but-uncommitted part files,
+    * interrupted concat temps, and abandoned dirs under `_staging`: a batch
+    * write's `_staging/<queryId>` from a job that died between task
+    * commit and driver commit, and a rewrite's scratch table
+    * `_staging/rewrite-<uuid>` ([[stageRewrite]]) from a driver that
+    * died mid-compaction, mid-materialization or mid-view-swap.
+    *
+    * The `olderThanMicros` cutoff is the same safety valve Iceberg
+    * requires: an in-flight writer's staged files are indistinguishable
+    * from debris by name, so only files whose mtime predates the cutoff
+    * are eligible — run with a cutoff older than the longest possible
+    * job, never "now", on a table with live writers. Same caveat as
+    * Delta documents for shallow clones: a clone references its
+    * source's files through the CLONE's manifest, which this table's
+    * log knows nothing about — vacuuming/orphan-sweeping a clone SOURCE
+    * below the snapshots its clones were taken from can strand them.
+    * Never touches `_versions` (the log itself), `_table.properties`,
+    * `_branches` (each branch is its own versioned table with its own
+    * log), or `_SUCCESS`. Runs under the table lock so a concurrent
+    * commit cannot land files between the reference scan and the
+    * delete. */
   def removeOrphans(root: Path, olderThanMicros: Long): OrphanStats =
     lockFor(root).synchronized {
       require(isVersioned(root),
